@@ -6,13 +6,20 @@ import org.apache.spark.sql.functions._
 /** S1 live-HTTP leg (`BronzeIngestUsers.py:23-27`): the fetch→bronze path
   * against (a) a pure function stub and (b) the production
   * `java.net.http` transport served by a loopback fixture server — no
-  * network egress either way. */
+  * network egress either way. The page both legs serve is the committed
+  * test resource `characters.json`, hand-written to the characters API
+  * schema (FIXTURES.md §5). */
 class HttpSourceSpec extends SparkSpec {
 
-  private val charactersJson = new String(
-    java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/api/characters.json")),
-    "UTF-8")
+  private val charactersResource = "/characters.json"
+
+  // lazy: a missing resource fails only the tests that read the page
+  private lazy val charactersJson: String = {
+    val in = Option(getClass.getResourceAsStream(charactersResource))
+      .getOrElse(fail(s"test resource $charactersResource is not on the classpath"))
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
 
   test("stub transport: fetch -> bronze over the reference characters page") {
     @volatile var seen: Option[HttpSource.Request] = None
@@ -67,13 +74,15 @@ class HttpSourceSpec extends SparkSpec {
   }
 
   test("javaHttpTransport GETs with headers from a loopback fixture server") {
+    // read on the test thread, so a missing page fails here, not in the
+    // server's handler thread
+    val bytes = charactersJson.getBytes("UTF-8")
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     @volatile var gotSignature: String = null
     server.createContext("/api/character",
       (exchange: com.sun.net.httpserver.HttpExchange) => {
         gotSignature = exchange.getRequestHeaders.getFirst("x-signature")
-        val bytes = charactersJson.getBytes("UTF-8")
         exchange.sendResponseHeaders(200, bytes.length)
         exchange.getResponseBody.write(bytes)
         exchange.close()
