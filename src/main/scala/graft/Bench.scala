@@ -188,19 +188,6 @@ object Bench {
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, full.getBytes("UTF-8"))
-    // The stdout line's ~1700-char budget drops the fastest queries
-    // (143 of 200 at round 18), which leaves round-over-round pairing
-    // blind for most of the suite. Mirror the COMPLETE map to a
-    // committed path as well — additive: the stdout line and
-    // target/bench.json keep their exact format and meaning.
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("tools"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("tools/bench_full.json"),
-        full.getBytes("UTF-8"))
-    } catch { case e: Throwable => // the mirror must never fail the bench
-      System.err.println(s"[bench] full-map mirror failed: ${e.getMessage}")
-    }
     spark.stop()
   }
 }

@@ -37,9 +37,9 @@ import org.apache.spark.sql.SparkSession
   * DROP IF EXISTS PARTITION` removes the partition's ROWS (a re-append
   * restores exactly the appended rows, no residue), and a grouped plan
   * on the bucket keys stays exchange-free with the partition column
-  * present — so batch-tagging costs probes nothing. A staging table +
-  * `ALTER TABLE ... RENAME TO` swap preserves data through the rename
-  * (the compaction path relies on this).
+  * present — so batch-tagging costs probes nothing. A staging table
+  * renamed over the live one ([[Swap.table]]) keeps its data through
+  * the rename (the compaction path relies on this).
   */
 object BatchLog {
 

@@ -24,11 +24,8 @@ import org.apache.spark.sql.functions._
   *    a no-op (purging the marker would let the replay re-append rows
   *    the fold already carries). One empty marker file per batch ever
   *    accepted is the price — bounded and cheap.
-  *  - the swap is two catalog ops (drop, rename) with the replacement
-  *    data durable first. The one crash window (dropped, not yet
-  *    renamed) leaves the staged table complete; [[heal]] finishes the
-  *    rename and runs at the start of every compaction — a probe in
-  *    that window fails LOUDLY (table not found), never silently wrong.
+  *  - the swap is [[Swap.table]] under the `__compact` stage name;
+  *    [[heal]] finishes an interrupted one.
   *  - probes are plan-identical afterwards: the staged write uses the
   *    same partition+bucket+sort spec, so the exchange-free corpus-side
   *    reads survive (spec re-asserts the executed plans).
@@ -69,32 +66,9 @@ object IndexCompaction {
 
   private def stageName(table: String) = s"${table}__compact"
 
-  /** Rename `stage` to `table`, then re-register its partitions:
-    * `ALTER TABLE RENAME` moves a managed table's directory but the
-    * catalog's partition entries keep their OLD locations, so a scan of
-    * the renamed table silently reads zero rows until the partitions
-    * are recovered from the moved files (measured: 32 files on disk,
-    * count() == 0). */
-  private def renameSwap(s: SparkSession, stage: String, table: String): Unit = {
-    s.sql(s"ALTER TABLE $stage RENAME TO $table")
-    s.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-  }
-
-  /** Finish an interrupted swap: the staged table is complete by
-    * construction, so if the target is gone, rename completes the
-    * compaction; if both exist, the stage is a dead leftover. */
-  def heal(s: SparkSession, table: String): Unit = {
-    val stage = stageName(table)
-    if (!s.catalog.tableExists(table) && s.catalog.tableExists(stage)) {
-      s.sql(s"ALTER TABLE $stage RENAME TO $table")
-      // the healed target may be partitioned (fold path) or not (stats
-      // row) — recover only when there are partitions to re-register
-      if (s.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-          .partitionColumnNames.nonEmpty)
-        s.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-    }
-  }
+  /** Finish an interrupted fold swap of `table` ([[Swap.healTable]]). */
+  def heal(s: SparkSession, table: String): Unit =
+    Swap.healTable(s, stageName(table), table)
 
   /** Parquet file count across a table's partitions — the maintenance
     * trigger (compact when it drifts far above the bucket count), from
@@ -126,43 +100,41 @@ object IndexCompaction {
       bucketCols: Seq[String], foldId: String,
       deletes: Option[(String, DeleteSet)] = None,
       protect: Option[String] = None): Unit = {
-    heal(s, table)
     val stage = stageName(table)
-    MinhashIndex.dropTable(s, stage)
-    // exclusion list = partitions present but not committed (tiny: only
-    // crashed-and-never-retried appends), so the filter never carries
-    // the full committed history into the plan
-    val partIds = s.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).stripPrefix("batch_id="))
-    val orphans = partIds.filterNot(committed).toSeq
-    val bucketedRead = "spark.sql.sources.bucketing.enabled"
-    val prev = s.conf.get(bucketedRead, "true")
-    s.conf.set(bucketedRead, "false")
-    try {
-      val live = s.table(table)
-      val nonOrphan = if (orphans.isEmpty) live
-        else live.filter(!col("batch_id").isin(orphans: _*))
-      // deletes ride the rewrite: an anti/semi-join against the (small
-      // or id-column-sized) set — broadcastable, never a corpus shuffle.
-      // `protect` exempts ONE committed partition from the delete set —
-      // the updated-doc reindex protocol's crash seam: its Remove set
-      // names ids whose CURRENT rows live in the just-appended reindex
-      // partition, and a maintenance replay (crash after the reindex
-      // append committed, before the bookmark advanced) must purge only
-      // the STALE generations, never the replacement it re-appended.
-      val folded = deletes.fold(nonOrphan) { case (idCol, ds) =>
-        protect match {
-          case None => applyDeleteSet(nonOrphan, idCol, ds)
-          case Some(p) =>
-            applyDeleteSet(nonOrphan.filter(col("batch_id") =!= p), idCol, ds)
-              .unionByName(nonOrphan.filter(col("batch_id") === p))
-        }
-      }.drop("batch_id")
-      MinhashIndex.writeBucketed(folded, stage, nBuckets,
-        append = false, foldId, bucketCols: _*)
-    } finally s.conf.set(bucketedRead, prev)
-    MinhashIndex.dropTable(s, table)
-    renameSwap(s, stage, table)
+    Swap.table(s, stage, table) {
+      // exclusion list = partitions present but not committed (tiny: only
+      // crashed-and-never-retried appends), so the filter never carries
+      // the full committed history into the plan
+      val partIds = s.sql(s"SHOW PARTITIONS $table").collect()
+        .map(_.getString(0).stripPrefix("batch_id="))
+      val orphans = partIds.filterNot(committed).toSeq
+      val bucketedRead = "spark.sql.sources.bucketing.enabled"
+      val prev = s.conf.get(bucketedRead, "true")
+      s.conf.set(bucketedRead, "false")
+      try {
+        val live = s.table(table)
+        val nonOrphan = if (orphans.isEmpty) live
+          else live.filter(!col("batch_id").isin(orphans: _*))
+        // deletes ride the rewrite: an anti/semi-join against the (small
+        // or id-column-sized) set — broadcastable, never a corpus shuffle.
+        // `protect` exempts ONE committed partition from the delete set —
+        // the updated-doc reindex protocol's crash seam: its Remove set
+        // names ids whose CURRENT rows live in the just-appended reindex
+        // partition, and a maintenance replay (crash after the reindex
+        // append committed, before the bookmark advanced) must purge only
+        // the STALE generations, never the replacement it re-appended.
+        val folded = deletes.fold(nonOrphan) { case (idCol, ds) =>
+          protect match {
+            case None => applyDeleteSet(nonOrphan, idCol, ds)
+            case Some(p) =>
+              applyDeleteSet(nonOrphan.filter(col("batch_id") =!= p), idCol, ds)
+                .unionByName(nonOrphan.filter(col("batch_id") === p))
+          }
+        }.drop("batch_id")
+        MinhashIndex.writeBucketed(folded, stage, nBuckets,
+          append = false, foldId, bucketCols: _*)
+      } finally s.conf.set(bucketedRead, prev)
+    }
   }
 
   /** Compact every table of a catalog-backed index family. `tables`

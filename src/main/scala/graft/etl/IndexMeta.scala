@@ -24,46 +24,33 @@ object IndexMeta {
 
   private def stageTable(name: String): String = s"${table(name)}__new"
 
-  /** Replace the meta table via stage-then-swap (the [[ManifestTable]]
-    * commit discipline on catalog tables): the replacement is durable
-    * under `_meta__new` BEFORE the old table drops, so no crash point
-    * loses both copies — the drop→rename window leaves `_meta` absent
-    * but `_meta__new` complete, and [[read]] heals it by finishing the
-    * rename. */
+  /** Replace the meta table through [[Swap.table]] with the
+    * `_meta__new` stage; [[exists]] and [[read]] heal an interrupted
+    * swap first. */
   def write(s: SparkSession, name: String,
       params: Map[String, String]): Unit = {
     import s.implicits._
-    val tgt = table(name)
     val stage = stageTable(name)
-    MinhashIndex.dropTable(s, stage)
-    params.toSeq.sorted.toDF("key", "value")
-      .coalesce(1) // a handful of rows; one file
-      .write.format("parquet").saveAsTable(stage)
-    MinhashIndex.dropTable(s, tgt)
-    s.sql(s"ALTER TABLE $stage RENAME TO $tgt") // data follows the name
+    Swap.table(s, stage, table(name)) {
+      params.toSeq.sorted.toDF("key", "value")
+        .coalesce(1) // a handful of rows; one file
+        .write.format("parquet").saveAsTable(stage)
+    }
   }
 
-  /** Heal-then-answer existence: finish a pending stage-swap rename
-    * first ([[write]]'s drop→rename window leaves only `_meta__new`,
-    * complete by construction), so a crash window never reads as "no
+  /** Heal-then-answer existence: a swap window never reads as "no
     * index" — the answer callers like
     * [[graft.streaming.ContinuousIngest]] use to decide build-vs-append,
     * where a false negative triggers a from-scratch rebuild that drops
     * the accumulated index. */
   def exists(s: SparkSession, name: String): Boolean = {
-    val tgt = table(name)
-    if (!s.catalog.tableExists(tgt) && s.catalog.tableExists(stageTable(name)))
-      s.sql(s"ALTER TABLE ${stageTable(name)} RENAME TO $tgt")
-    s.catalog.tableExists(tgt)
+    Swap.healTable(s, stageTable(name), table(name))
+    s.catalog.tableExists(table(name))
   }
 
   def read(s: SparkSession, name: String): Map[String, String] = {
     val tgt = table(name)
-    // a crash between write()'s drop and rename leaves only the staged
-    // copy — complete by construction, so finish the swap here
-    if (!s.catalog.tableExists(tgt) && s.catalog.tableExists(stageTable(name)))
-      s.sql(s"ALTER TABLE ${stageTable(name)} RENAME TO $tgt")
-    require(s.catalog.tableExists(tgt),
+    require(exists(s, name),
       s"index '$name' has no $tgt table — built by an older " +
         "build, or the build crashed before its meta write; rebuild it")
     s.table(tgt).collect()

@@ -42,7 +42,7 @@ object LakeLayout {
     fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("__ym="))
-        fs.rename(st.getPath,
+        Swap.rename(fs, st.getPath,
           new org.apache.hadoop.fs.Path(root, name.stripPrefix("__ym=")))
     }
   }
@@ -52,28 +52,22 @@ object LakeLayout {
     * thousands of KB-size files per partition, and at 100 TB the
     * per-file open/footer overhead dominates scans. One distributed
     * read → `coalesce` (no shuffle — coalescing only merges read
-    * splits) → rewrite aside → crash-safe rename swap (same protocol
-    * as the merge path: the aside copy is restored on recovery, never
-    * deleted while it is the only copy). Returns the new file count. */
+    * splits) → rewrite under `_compact_tmp` → [[Swap.dir]] through
+    * `_compact_old`. Returns the new file count. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + "_compact_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "_compact_old")
-    if (fs.exists(old)) {
-      if (!fs.exists(root)) require(fs.rename(old, root), s"recovery rename failed: $old")
-      else fs.delete(old, true)
-    }
+    Swap.healDir(fs, tmp, root, old)
     val dataFiles = fs.listStatus(root)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     spark.read.parquet(path).coalesce(nOut)
       .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(root, old), s"rename failed: $root -> $old")
-    require(fs.rename(tmp, root), s"rename failed: $tmp -> $root")
-    fs.delete(old, true)
+    Swap.dir(fs, tmp, root, old)
     fs.listStatus(root).count(st => st.isFile && !st.getPath.getName.startsWith("_"))
   }
 

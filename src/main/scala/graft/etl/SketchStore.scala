@@ -165,49 +165,34 @@ object SketchStore {
   }
 
   /** Compact every batch partition (and any pending negative cells)
-    * back to ONE d×w grid under the build id — the stage-then-swap
-    * discipline: the folded grid is durable under `__new` before the
-    * old table drops, and [[storedCells]] heals the one crash window
-    * left (drop done, rename not). The batch log is deliberately NOT
-    * reset: the committed markers are what keeps a replayed
-    * streaming-batch append a no-op AFTER its rows were folded away
-    * from their original partition — resetting would let the replay
-    * double-count. */
+    * back to ONE d×w grid under the build id, through [[Swap.table]]
+    * with the `__new` stage. The batch log is deliberately NOT reset:
+    * the committed markers are what keeps a replayed streaming-batch
+    * append a no-op AFTER its rows were folded away from their original
+    * partition — resetting would let the replay double-count. */
   def fold(s: SparkSession, name: String): Unit = {
     val t = cellsTable(name)
-    val stage = s"${t}__new"
-    MinhashIndex.dropTable(s, stage)
-    val folded = storedCells(s, name)
-      .groupBy(col("i"), col("bucket")).agg(sum(col("c")).as("c"))
-      .filter(col("c") =!= 0L)
-    MinhashIndex.writeBucketed(folded, stage, NBuckets,
-      append = false, BatchLog.BuildId, "bucket")
-    MinhashIndex.dropTable(s, t)
-    renameSwap(s, stage, t)
+    Swap.table(s, stageTable(t), t) {
+      val folded = storedCells(s, name)
+        .groupBy(col("i"), col("bucket")).agg(sum(col("c")).as("c"))
+        .filter(col("c") =!= 0L)
+      MinhashIndex.writeBucketed(folded, stageTable(t), NBuckets,
+        append = false, BatchLog.BuildId, "bucket")
+    }
   }
 
-  /** RENAME moves a managed table's directory but the catalog's
-    * partition entries keep their OLD locations — a scan of the renamed
-    * table silently reads zero rows until the partitions are recovered
-    * (the [[IndexCompaction.renameSwap]] lesson, same fix). */
-  private def renameSwap(s: SparkSession, stage: String, t: String): Unit = {
-    s.sql(s"ALTER TABLE $stage RENAME TO $t")
-    s.sql(s"ALTER TABLE $t RECOVER PARTITIONS")
-  }
+  private def stageTable(t: String) = s"${t}__new"
 
   def exists(s: SparkSession, name: String): Boolean =
     s.catalog.tableExists(cellsTable(name)) ||
-      s.catalog.tableExists(s"${cellsTable(name)}__new")
+      s.catalog.tableExists(stageTable(cellsTable(name)))
 
-  /** Finish an interrupted [[fold]] swap (old table dropped, staged
-    * grid not yet renamed) before any read or append touches the
-    * table — an append against the missing name would otherwise
-    * re-create it EMPTY and orphan the folded history. */
+  /** Finish an interrupted [[fold]] swap before any read or append
+    * touches the table — an append against the missing name would
+    * otherwise re-create it EMPTY and orphan the folded history. */
   private def heal(s: SparkSession, name: String): Unit = {
     val t = cellsTable(name)
-    val stage = s"${t}__new"
-    if (!s.catalog.tableExists(t) && s.catalog.tableExists(stage))
-      renameSwap(s, stage, t)
+    Swap.healTable(s, stageTable(t), t)
   }
 
   /** The cells frame, healing an interrupted [[fold]] swap first. */

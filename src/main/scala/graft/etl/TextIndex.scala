@@ -24,8 +24,8 @@ import graft.operators.{DedupOps, TextOps}
   *  - `<name>_stats(n_docs, avgdl)` — one row, computed with the exact
   *    arithmetic the recompute path uses (integer token sum, one double
   *    division) so served scores are bit-identical to recomputed ones.
-  *    Refreshed stage-then-swap: the replacement is durable before the
-  *    old row drops, and [[search]] heals the one crash window left.
+  *    Refreshed through [[Swap.table]]; [[search]] heals an
+  *    interrupted refresh.
   *
   * At 100 TB: probe cost is O(matching postings), not O(corpus) — the
   * index read is pruned to the query's terms by pushed filters and
@@ -147,25 +147,20 @@ object TextIndex {
         (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"),
         count(lit(1)).as("n_docs"))
 
-  /** Stats refresh without the overwrite crash window: the replacement
-    * row is durable under `_stats__new` BEFORE the old table drops (the
-    * [[IndexMeta.write]] discipline). A crash between drop and rename
-    * leaves only the staged copy; [[search]] finishes the swap. */
-  private def refreshStats(s: SparkSession, t: Tables): Unit = {
-    val stage = s"${t.stats}__new"
-    MinhashIndex.dropTable(s, stage)
-    statsFrame(s, t).write.format("parquet").saveAsTable(stage)
-    MinhashIndex.dropTable(s, t.stats)
-    s.sql(s"ALTER TABLE $stage RENAME TO ${t.stats}")
-  }
+  /** Stats refresh through [[Swap.table]] with the `_stats__new`
+    * stage, so no crash leaves a reader without a stats row. */
+  private def refreshStats(s: SparkSession, t: Tables): Unit =
+    Swap.table(s, statsStage(t), t.stats) {
+      statsFrame(s, t).write.format("parquet").saveAsTable(statsStage(t))
+    }
+
+  private def statsStage(t: Tables) = s"${t.stats}__new"
 
   /** The stats row, healing an interrupted [[refreshStats]] swap; the
     * final fallback recomputes from doclens with the identical
     * expression, so a served score can never drift. */
   private def readStats(s: SparkSession, t: Tables): DataFrame = {
-    val stage = s"${t.stats}__new"
-    if (!s.catalog.tableExists(t.stats) && s.catalog.tableExists(stage))
-      s.sql(s"ALTER TABLE $stage RENAME TO ${t.stats}")
+    Swap.healTable(s, statsStage(t), t.stats)
     if (s.catalog.tableExists(t.stats)) s.table(t.stats)
     else statsFrame(s, t)
   }

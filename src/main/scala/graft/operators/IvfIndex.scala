@@ -155,30 +155,17 @@ object IvfIndex {
     s.read.parquet(s"$path/_centroids")
 
   /** Build, persist lists AND quantizer: the self-contained persisted
-    * IVF entry. The whole build lands in the `__retrain` STAGE dir
-    * (`_centroids` written last as the completeness marker) and promotes
-    * through the same rename swap [[retrainIndexDir]] uses — so a
-    * crashed build never leaves a live dir without its quantizer, and
-    * [[existsDir]]'s post-heal answer is unambiguous: a live dir IS a
-    * complete index. Every crash window is one of [[heal]]'s cases; the
-    * retry converges. Returns the trained centroids. */
+    * IVF entry. The whole build is staged and swapped in
+    * ([[stageAndSwap]]), so a crashed build never leaves a live dir
+    * without its quantizer, and [[existsDir]]'s post-heal answer is
+    * unambiguous: a live dir IS a complete index. Returns the trained
+    * centroids. */
   def buildIndexDir(s: SparkSession, embeddings: DataFrame, path: String,
       k: Int = 8, iters: Int = 3,
       buildBatchId: String = graft.etl.BatchLog.BuildId): DataFrame = {
     heal(s, path)
     val (index, centroids) = buildIndex(s, embeddings, k, iters)
-    val stage = stagePath(path)
-    val stageP = new org.apache.hadoop.fs.Path(stage)
-    val fs = fsFor(s, stageP)
-    if (fs.exists(stageP)) fs.delete(stageP, true) // crashed prior attempt
-    writeIndex(index, stage, buildBatchId)
-    writeCentroids(centroids, stage) // completeness marker
-    val liveP = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(oldPath(path))
-    if (fs.exists(liveP))
-      require(fs.rename(liveP, oldP), s"build swap: rename $path -> ${oldPath(path)} failed")
-    require(fs.rename(stageP, liveP), s"build swap: rename $stage -> $path failed")
-    fs.delete(oldP, true)
+    stageAndSwap(s, path, centroids)(writeIndex(index, _, buildBatchId))
     centroids
   }
 
@@ -213,8 +200,8 @@ object IvfIndex {
     * [[retrainIndexDir]] is the entry that also re-derives centroids.
     * Orphan partitions (crashed appends absent from the committed log)
     * are excluded and vanish in the swap; committed markers carry into
-    * the stage's log as tombstones so late replays stay no-ops. Same
-    * staged-rename swap and [[heal]] coverage as retrain. */
+    * the stage's log as tombstones so late replays stay no-ops. Staged
+    * and swapped in like a build ([[stageAndSwap]]). */
   def compactIndexDir(s: SparkSession, path: String,
       deletes: Option[graft.etl.IndexCompaction.DeleteSet] = None): Unit = {
     import graft.etl.{BatchLog, IndexCompaction}
@@ -227,19 +214,11 @@ object IvfIndex {
     val lists = deletes.fold(lists0)(ds =>
       IndexCompaction.applyDeleteSet(lists0, "vec_id", ds))
     val centroids = readCentroids(s, path).localCheckpoint() // pre-swap pin
-    val stage = stagePath(path)
-    val stageP = new org.apache.hadoop.fs.Path(stage)
-    val fs = fsFor(s, stageP)
-    if (fs.exists(stageP)) fs.delete(stageP, true)
     val foldId = s"00000-fold-${java.util.UUID.randomUUID().toString.take(8)}"
-    writeIndex(lists, stage, foldId)
-    committed.foreach(BatchLog.commit(s, BatchLog.logDirAt(stage), _))
-    writeCentroids(centroids, stage) // completeness marker
-    val liveP = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(oldPath(path))
-    require(fs.rename(liveP, oldP), s"compact swap: rename $path -> ${oldPath(path)} failed")
-    require(fs.rename(stageP, liveP), s"compact swap: rename $stage -> $path failed")
-    fs.delete(oldP, true)
+    stageAndSwap(s, path, centroids) { stage =>
+      writeIndex(lists, stage, foldId)
+      committed.foreach(BatchLog.commit(s, BatchLog.logDirAt(stage), _))
+    }
   }
 
   /** Per-batch index maintenance: assign `newVecs` to the EXISTING
@@ -327,35 +306,33 @@ object IvfIndex {
   private def fsFor(s: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def stagePath(path: String) = s"${path}__retrain"
-  private def oldPath(path: String) = s"${path}__old"
+  private def stagePath(path: String) = new org.apache.hadoop.fs.Path(s"${path}__retrain")
+  private def oldPath(path: String) = new org.apache.hadoop.fs.Path(s"${path}__old")
 
-  /** Finish an interrupted [[retrainIndexDir]] swap. The staging dir is
-    * complete iff its `_centroids` exists (written last); completeness
-    * decides which side of the swap to finish:
-    *  - live dir missing + complete stage → the crash hit between the
-    *    renames: promote the stage.
-    *  - live dir missing + retired old copy present → the crash hit
-    *    after retiring the old dir with an INCOMPLETE stage (or the
-    *    stage already promoted earlier): restore the old copy.
-    *  - live dir present → any leftover stage/old dirs are dead weight
-    *    from a crash after the swap: sweep them.
-    * Idempotent; runs at the start of every retrain. */
+  /** The whole-index swap of build, compact and retrain: `writeLists`
+    * fills the `__retrain` stage, `centroids` land LAST as the
+    * completeness marker [[heal]] keys on (a stage without them is
+    * never promoted), then [[graft.etl.Swap.dir]] promotes the stage
+    * through `__old`. */
+  private def stageAndSwap(s: SparkSession, path: String,
+      centroids: DataFrame)(writeLists: String => Unit): Unit = {
+    val stage = stagePath(path)
+    val fs = fsFor(s, stage)
+    fs.delete(stage, true) // a crashed prior attempt's partial stage
+    writeLists(stage.toString)
+    writeCentroids(centroids, stage.toString)
+    graft.etl.Swap.dir(fs, stage, new org.apache.hadoop.fs.Path(path), oldPath(path))
+  }
+
+  /** Finish an interrupted [[stageAndSwap]] ([[graft.etl.Swap.healDir]]);
+    * a stage is complete iff its `_centroids` exists. Runs before every
+    * build, compact, retrain and [[existsDir]] answer. */
   def heal(s: SparkSession, path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(path)
-    val stage = new Path(stagePath(path))
-    val old = new Path(oldPath(path))
     val fs = fsFor(s, live)
-    def complete(p: Path) = fs.exists(new Path(p, "_centroids"))
-    if (!fs.exists(live)) {
-      if (fs.exists(stage) && complete(stage)) fs.rename(stage, live)
-      else if (fs.exists(old)) fs.rename(old, live)
-    }
-    if (fs.exists(live)) {
-      if (fs.exists(stage)) fs.delete(stage, true)
-      if (fs.exists(old)) fs.delete(old, true)
-    }
+    graft.etl.Swap.healDir(fs, stagePath(path), live, oldPath(path),
+      p => fs.exists(new Path(p, "_centroids")))
   }
 
   /** Retrain-on-growth for the persisted IVF index — the quantizer
@@ -364,20 +341,10 @@ object IvfIndex {
     * (n/k) — and with it every probe's rerank — grows linearly again.
     * When the accumulated committed vector count implies a k at least
     * `growFactor`× the trained one, retrain at the derived k and swap
-    * the whole index directory atomically:
-    *
-    *   1. train + assign + write into `<path>__retrain` (own batch log,
-    *      `_centroids` written LAST as the completeness marker);
-    *   2. rename `<path>` → `<path>__old` (readers now fail loudly —
-    *      never silently stale);
-    *   3. rename `<path>__retrain` → `<path>`;
-    *   4. delete `<path>__old`.
-    *
-    * Every window between those steps is covered by [[heal]], which
-    * promotes a complete stage or restores the retired copy — the index
-    * is loud-until-healed, never a mix of old lists and new quantizer
-    * (the failure class the LSH family's generation flip also exists to
-    * prevent). Orphan batch dirs (crashed appends, absent from the
+    * the whole index directory in ([[stageAndSwap]]; the stage carries
+    * its own batch log). The index is loud-until-healed, never a mix of
+    * old lists and new quantizer (the failure class the LSH family's
+    * generation flip also exists to prevent). Orphan batch dirs (crashed appends, absent from the
     * committed log) are excluded from the retrain's input and vanish in
     * the swap — same exclusion [[graft.etl.IndexCompaction.fold]]
     * applies, so the retrain doubles as the family's compaction.
@@ -409,27 +376,16 @@ object IvfIndex {
     val kNow = readCentroids(s, path).count()
     val kWant = autoK(n, minK, maxK)
     if (kWant < kNow * growFactor) return false
-    val stage = stagePath(path)
-    val stageP = new org.apache.hadoop.fs.Path(stage)
-    val fs = fsFor(s, stageP)
-    if (fs.exists(stageP)) fs.delete(stageP, true) // crashed prior attempt
     val centroids = trainCentroids(s,
       vecs.select($"vec_id", $"v".as("embedding")), kWant, iters)
-    writeIndex(assign(s, vecs, centroids), stage)
-    // carry the old committed markers into the stage's log as tombstones
-    // (the IndexCompaction discipline): a very late replay of a
-    // long-retrained batch must stay a no-op, not re-append rows the
-    // retrain already folded in
-    committed.foreach(BatchLog.commit(s, BatchLog.logDirAt(stage), _))
-    writeCentroids(centroids, stage) // completeness marker
-    val liveP = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(oldPath(path))
-    // Hadoop rename reports failure by RETURNING false — require() turns
-    // that into the loud abort the swap protocol assumes (a half-swapped
-    // state is then exactly one of heal()'s windows)
-    require(fs.rename(liveP, oldP), s"retrain swap: rename $path -> ${oldPath(path)} failed")
-    require(fs.rename(stageP, liveP), s"retrain swap: rename $stage -> $path failed")
-    fs.delete(oldP, true)
+    stageAndSwap(s, path, centroids) { stage =>
+      writeIndex(assign(s, vecs, centroids), stage)
+      // carry the old committed markers into the stage's log as
+      // tombstones (the IndexCompaction discipline): a very late replay
+      // of a long-retrained batch must stay a no-op, not re-append rows
+      // the retrain already folded in
+      committed.foreach(BatchLog.commit(s, BatchLog.logDirAt(stage), _))
+    }
     true
   }
 

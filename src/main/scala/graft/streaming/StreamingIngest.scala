@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.etl.MergeService
+import graft.etl.{MergeService, Swap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -165,26 +165,13 @@ object StreamingIngest {
     }
   }
 
-  /** Rename that fails loudly — `FileSystem.rename` signals failure by
-    * RETURN VALUE, and a swallowed false corrupts the swap protocol. */
-  private def checkedRename(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-
   /** Read-merge-swap MERGE into a parquet dir (micro-batch or one record).
     *
     * The filesystem is resolved from `basePath`'s own scheme (a
     * `FileSystem.get(conf)` here would silently hit the DEFAULT
     * filesystem — wrong whenever the table lives on s3a/abfs and the
-    * default is hdfs/file). The swap is rename-aside, not
-    * delete-then-rename: the new data is renamed in only after the old
-    * dir has been moved aside, so a crash at any step leaves either the
-    * old table or both dirs on disk — never NO table. Recovery runs at
-    * entry: `_old` present with `base` missing means a previous run died
-    * mid-swap — the aside copy IS the table and is renamed back (deleting
-    * it as a "stale leftover", as this code once did, would silently
-    * discard the whole pre-crash table); `_old` is only garbage once
-    * `base` exists.
+    * default is hdfs/file). The swap is [[Swap.dir]] through
+    * `_tmp` and `_old`, healed at entry.
     *
     * Scale note: this variant rewrites the WHOLE base per batch — correct
     * for driver-small keyed silver tables (the reference's per-record
@@ -220,27 +207,20 @@ object StreamingIngest {
       case None => batch
     }
 
-  /** The crash-recovering full-rewrite swap shared by the writers above:
-    * recover any interrupted previous swap, build the new contents from
-    * the current base (None = table absent), write them aside, then
-    * aside-swap with recovery markers. */
+  /** The full-rewrite swap shared by the writers above: heal any
+    * interrupted previous swap, build the new contents from the current
+    * base (None = table absent), write them to `_tmp`, swap them in. */
   private def swapIn(spark: SparkSession, basePath: String)(
       contents: Option[DataFrame] => DataFrame): Unit = {
     val base = new org.apache.hadoop.fs.Path(basePath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(basePath + "_tmp")
     val old = new org.apache.hadoop.fs.Path(basePath + "_old")
-    if (fs.exists(old)) {
-      if (!fs.exists(base)) checkedRename(fs, old, base) // crashed mid-swap
-      else fs.delete(old, true) // swap completed; aside copy is garbage
-    }
+    Swap.healDir(fs, tmp, base, old)
     val merged = contents(
       if (fs.exists(base)) Some(spark.read.parquet(basePath)) else None)
     merged.write.mode("overwrite").parquet(tmp.toString)
-    val hadBase = fs.exists(base)
-    if (hadBase) checkedRename(fs, base, old)
-    checkedRename(fs, tmp, base)
-    if (hadBase) fs.delete(old, true)
+    Swap.dir(fs, tmp, base, old)
   }
 
   /** Partition-scoped MERGE into a date-partitioned parquet table (layout
@@ -263,11 +243,10 @@ object StreamingIngest {
     * (driver-small — distinct DATES in a micro-batch), the base is read
     * with a partition-pruned filter, merged, and written partitioned to a
     * sibling `__tmp` root in ONE job; each produced partition dir is then
-    * swapped in with the same rename-aside protocol as
-    * [[mergeIntoParquet]] (aside copies live under a sibling `__old`
-    * root — never inside the table, where hive-style readers would parse
-    * them as partitions). Recovery at entry renames orphaned aside
-    * partitions back before merging. */
+    * swapped in with [[Swap.dir]], retired copies under a
+    * sibling `__old` root — never inside the table, where hive-style
+    * readers would parse them as partitions. Each aside partition is
+    * healed at entry, before merging. */
   def mergeIntoDatePartitioned(spark: SparkSession, batch: DataFrame,
       basePath: String, keys: Seq[String], dateCol: String): Unit = {
     // The partition column must be pinned by the merge key: otherwise an
@@ -282,14 +261,12 @@ object StreamingIngest {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldRoot = new Path(basePath + "__old")
     val tmpRoot = new Path(basePath + "__tmp")
-    // Recovery: an aside partition whose table dir is missing is the
-    // surviving copy of a crashed swap — restore it; otherwise it is a
-    // completed swap's leftover.
+    def swapPaths(part: String) =
+      (new Path(tmpRoot, part), new Path(base, part), new Path(oldRoot, part))
     if (fs.exists(oldRoot)) {
       fs.listStatus(oldRoot).foreach { st =>
-        val dst = new Path(base, st.getPath.getName)
-        if (!fs.exists(dst)) checkedRename(fs, st.getPath, dst)
-        else fs.delete(st.getPath, true)
+        val (stage, live, old) = swapPaths(st.getPath.getName)
+        Swap.healDir(fs, stage, live, old)
       }
       fs.delete(oldRoot, true)
     }
@@ -306,17 +283,14 @@ object StreamingIngest {
     val merged = MergeService.upsert(baseSub, batchD, keys).drop("merge_action")
     merged.withColumn("part_year", year(col(dateCol)))
       .write.mode("overwrite").partitionBy("part_year").parquet(tmpRoot.toString)
+    fs.mkdirs(oldRoot)
     fs.listStatus(tmpRoot)
       .filter(_.getPath.getName.startsWith("part_year="))
       .foreach { st =>
-        val dst = new Path(base, st.getPath.getName)
-        val aside = new Path(oldRoot, st.getPath.getName)
-        val had = fs.exists(dst)
-        if (had) { fs.mkdirs(oldRoot); checkedRename(fs, dst, aside) }
-        checkedRename(fs, st.getPath, dst)
-        if (had) fs.delete(aside, true)
+        val (stage, live, old) = swapPaths(st.getPath.getName)
+        Swap.dir(fs, stage, live, old)
       }
     fs.delete(tmpRoot, true)
-    if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
+    fs.delete(oldRoot, true)
   }
 }

@@ -85,8 +85,7 @@ object WatermarkQueries extends QueryModule {
         throw new IllegalStateException(s"no parquet staged under $stageDir"))
     val dp = new Path(dest)
     fs.mkdirs(dp.getParent)
-    if (!fs.rename(part, dp))
-      throw new IllegalStateException(s"stage rename failed: $part -> $dp")
+    graft.etl.Swap.rename(fs, part, dp)
     fs.setTimes(dp, mtimeMs, -1)
     fs.delete(sp, true)
   }

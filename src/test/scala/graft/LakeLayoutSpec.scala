@@ -95,5 +95,12 @@ class LakeLayoutSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(path + "_compact_old")))
     assert(graft.etl.LakeLayout.compact(spark, path) == 1)
     assert(spark.read.parquet(path).orderBy($"id").collect().toSeq == before)
+    // a completed swap's leftover: live dir AND a stale aside copy ->
+    // the aside copy is swept, never restored over the live rows
+    (1 to 5).map(i => (i.toLong, "stale")).toDF("id", "s")
+      .write.parquet(path + "_compact_old")
+    assert(graft.etl.LakeLayout.compact(spark, path) == 1)
+    assert(spark.read.parquet(path).orderBy($"id").collect().toSeq == before)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "_compact_old")))
   }
 }
