@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
 object Bench {
   /** The load-suspect rule, factored out for direct testing: a measured
     * `v` seconds is suspect against a prior `p` when it exceeds 5× the
@@ -61,62 +64,72 @@ object Bench {
       }
     }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+  /** The harness session: `cpus` local cores with AQE on, one warm-up
+    * run of the entry query so the first measured query is not charged
+    * for JIT and codegen. */
+  private[graft] def session(cpus: Int): SparkSession = {
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JIT/codegen warmup so the first measured query isn't charged for it
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // No query may leak cache into the next one's timing (round-2 lesson:
-    // a leaked persist distorted ~50 downstream numbers).
-    def cleanup(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    spark
+  }
+
+  /** No query may leak cache into the next one's timing (round-2 lesson:
+    * a leaked persist distorted ~50 downstream numbers). */
+  private def cleanup(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Seconds for bench query `name` against `dir`, the one timing loop
+    * of [[Bench]] and [[ScaleCurve]]. Its offline artifact build
+    * (`benchSetups`, persisted indexes) runs ONCE, untimed — periodic
+    * jobs amortized across probes, not per-query cost; a failed setup is
+    * loud, and the reps then fail. Then the min over `reps` runs:
+    * single-shot timings at this scale swing up to 5x on identical code
+    * (JVM/OS noise), so the min is the stable signal. Each rep writes
+    * through the noop sink, which forces every output column (count()
+    * would let Catalyst prune the projections being measured); elapsed
+    * is captured BEFORE cleanup so cache teardown is not charged to the
+    * query, and is logged on stderr. Failed reps are dropped (a fast
+    * failure must not masquerade as a fast run); all failed = −1. */
+  private[graft] def measure(spark: SparkSession, dir: String, name: String,
+      reps: Int): Double = {
+    SparkEntry.benchSetups.get(name).foreach { setup =>
+      try { setup(spark, dir); cleanup(spark) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name setup failed: ${e.getMessage}")
+      }
     }
-    // local iteration only — the driver never sets it, so per-round bench
-    // always covers the full surface
+    val fn = SparkEntry.benchQueries(name)
+    val times = (1 to reps).flatMap { rep =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+        }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      cleanup(spark)
+      if (!ok) None
+      else { System.err.println(f"[bench] $name%s rep $rep%d $elapsed%.3f s"); Some(elapsed) }
+    }
+    if (times.isEmpty) -1.0 else times.min
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+    val spark = session(cpus)
+    // local iteration only — unset, a run covers the full surface
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // min over `n` runs: single-shot timings at this scale swing up to
-    // 5x on identical code (JVM/OS noise) — the min is the stable signal.
-    // Elapsed is captured BEFORE cleanup() so cache-teardown cost is not
-    // charged to the query; failed reps are dropped (a fast failure must
-    // not masquerade as a fast run), and an all-failed query reports -1.
-    def measure(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        n: Int): Double = {
-      val times = (1 to n).flatMap { _ =>
-        val t0 = System.nanoTime()
-        // noop sink forces full evaluation of every output column —
-        // count() would let Catalyst prune the projections being measured.
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        cleanup()
-        if (ok) Some(elapsed) else None
-      }
-      if (times.isEmpty) -1.0 else times.min
-    }
-    val benchDefs = SparkEntry.benchQueries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    val firstPass = benchDefs.map { case (name, fn) =>
-      // Offline artifact builds (persisted indexes) run ONCE, untimed —
-      // they are periodic jobs amortized across probes, not per-query cost.
-      // A failed setup is loud: the probe reps then fail and report -1.
-      SparkEntry.benchSetups.get(name).foreach { setup =>
-        try { setup(spark, sfDir); cleanup() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name setup failed: ${e.getMessage}")
-        }
-      }
-      name -> measure(name, fn, reps)
-    }
+    val firstPass = SparkEntry.benchQueries.keys.toSeq.sorted
+      .filter(name => only.isEmpty || only(name))
+      .map(name => name -> measure(spark, sfDir, name, reps))
     // SELF-DEFENSE AGAINST HOST-LOAD POISONING (rounds 3/9/10/11/12 all
     // shipped artifacts with 10-50x phantom regressions that isolated
     // back to anchor on identical code): any query whose min exceeds 5x
@@ -141,10 +154,7 @@ object Bench {
       else {
         System.err.println(f"[bench] $name%s first-pass ${v}%.2fs vs prior " +
           f"${prior(name)}%.2fs — re-running (load suspected)")
-        SparkEntry.benchSetups.get(name).foreach { setup =>
-          try { setup(spark, sfDir); cleanup() } catch { case _: Throwable => () }
-        }
-        val v2 = measure(name, SparkEntry.benchQueries(name), reps)
+        val v2 = measure(spark, sfDir, name, reps)
         name -> (if (v2 >= 0) math.min(v, v2) else v)
       }
     }

@@ -41,8 +41,7 @@ import graft.streaming.ContinuousIngest
 object IngestScale {
 
   /** Deterministic 16-dim embedding derived from doc_id — the harness
-    * only needs shape + stable values (same convention as
-    * [[IngestProfile]]). */
+    * only needs shape + stable values. */
   private def withCols(df: DataFrame): DataFrame = df
     .withColumn("doc_date", to_date(lit("2024-01-15")))
     .withColumn("embedding",

@@ -21,7 +21,7 @@ import graft.core.T
   * untouched.
   *
   * One representative query per operator family is then timed at each
-  * multiplier (same min-of-reps noop-sink protocol as [[Bench]]); the
+  * multiplier by [[Bench.measure]], the bench's own timing loop; the
   * per-family time ratio vs m=1 is the product. Near-m ratios mean the
   * family is linear in the data; the indexed-probe family should sit
   * well BELOW m (probe cost follows matching candidates, not corpus
@@ -203,25 +203,15 @@ object ScaleCurve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val mults = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTS", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
-    val qNames = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
+    val qNames = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSeq).getOrElse(curveQueries)
     val userScaled = sys.env.get("SPARK_GRAFT_SCALE_USERSCALED").contains("1")
     val root = "target/scalecurve"
-
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-
-    def cleanup(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    val spark = Bench.session(cpus)
 
     // query name -> multiplier -> min seconds
     val results = scala.collection.mutable.LinkedHashMap[String,
@@ -247,26 +237,7 @@ object ScaleCurve {
           d
         }
       qNames.foreach { name =>
-        val fn = SparkEntry.benchQueries(name)
-        SparkEntry.benchSetups.get(name).foreach { setup =>
-          try { setup(spark, dir); cleanup() }
-          catch { case e: Throwable =>
-            System.err.println(s"[scalecurve] $name setup failed at ${m}x: ${e.getMessage}")
-          }
-        }
-        val times = (1 to reps).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[scalecurve] $name failed at ${m}x: ${e.getMessage}")
-              false
-            }
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          cleanup()
-          if (ok) Some(elapsed) else None
-        }
-        val best = if (times.isEmpty) -1.0 else times.min
+        val best = Bench.measure(spark, dir, name, reps)
         results.getOrElseUpdate(name,
           scala.collection.mutable.LinkedHashMap[Int, Double]()).update(m, best)
         System.err.println(f"[scalecurve] $name%-22s ${m}%2dx  $best%8.3f s")

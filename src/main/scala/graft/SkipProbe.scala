@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `s11`/`s12` queries use at a chosen sf and prints FILE COUNTS a
   * pruned read opens vs. the table's total, plus the metadata-aggregate
   * answer. The numbers quoted in SCALE.md's "Data skipping" section come
-  * from this main (same convention as `graft.IngestProfile` for the
-  * ingest costs): claims about skipped files are measured, not asserted.
+  * from this main, as the per-leg ingest costs come from the traced
+  * benchmark run (`python3 perfbench/run.py --workload ingest --trace 1`):
+  * claims about skipped files are measured, not asserted.
   *
   * Usage: `sbt "runMain graft.SkipProbe [sfDir]"` (default sf0.1).
   */

@@ -25,13 +25,13 @@ import org.apache.spark.sql.SparkSession
   *    Sizing partitions by bytes is the scale-adaptive rule (guide
   *    §2.1/§2.2/§2.6): tiny inputs coalesce to a handful of tasks, a
   *    100 TB shuffle still fans out to bytes/advisory partitions. The
-  *    advisory size stays at Spark's default (64 MB) — overridable per
-  *    deployment via `SPARK_GRAFT_ADVISORY_PARTITION_BYTES` — and
-  *    `parallelismFirst` itself via `SPARK_GRAFT_PARALLELISM_FIRST`,
-  *    so the bytes-vs-cores rule is a parameter, not a local[32] tune.
+  *    advisory size stays at Spark's default (64 MB).
   *
   * Callers append deployment-specific settings (master cores, shuffle
-  * partitions sized to the cluster, AQE) on the returned builder.
+  * partitions sized to the cluster, AQE) on the returned builder; a
+  * deployment that needs another advisory size, `parallelismFirst` or
+  * coalescing floor sets that key there too, since a later `config`
+  * call wins.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -43,10 +43,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       // CPU floor under the bytes rule: a stage can be byte-tiny but
       // compute-heavy (the prefix join's candidate verify measured 3×
       // slower coalesced to 1 task), so keep at least a quarter of the
@@ -54,6 +52,5 @@ object GraftSession {
       // count, so it scales with the cluster rather than pinning a
       // local constant.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM",
-          math.max(1, shufflePartitions / 4).toString))
+        math.max(1, shufflePartitions / 4).toString)
 }

@@ -1034,7 +1034,7 @@ object ManifestTable {
       readSnapshot(spark, basePath, snap).drop("part_year").schema)
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"delete key $k is not a column of $basePath"))
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val release = graft.core.Pins.since(spark.sparkContext)
     try {
       val tuples = matched
         .select((keys :+ "part_year").map(col): _*)
@@ -1048,12 +1048,7 @@ object ManifestTable {
       commit(spark, basePath,
         Staged(snap.copy(version = next, deletes = snap.deletes :+ dDir)))
       n
-    } finally {
-      // a localCheckpoint never enters the cache manager; drop this
-      // call's pins once the tuple file is durable
-      (spark.sparkContext.getPersistentRDDs -- pinnedBefore.toSeq)
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    } finally release() // this call's pins, once the tuple file is durable
   }
 
   /** CDC APPLY — consume a [[changes]] feed and converge this table to
@@ -1073,7 +1068,7 @@ object ManifestTable {
       keys: Seq[String], dateCol: String): (Long, Long) = {
     require(feed.columns.contains("change"),
       "a CDC feed carries the 'change' classification column")
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val release = graft.core.Pins.since(spark.sparkContext)
     try {
       // one pass over the (changed-rows-sized) feed, pinned: the upsert
       // and delete arms both read it, and the merge must not observe a
@@ -1090,10 +1085,7 @@ object ManifestTable {
         if (dels.isEmpty) 0L
         else deleteKeysMoR(spark, basePath, dels, keys)
       (nUps, nDels)
-    } finally {
-      (spark.sparkContext.getPersistentRDDs -- pinnedBefore.toSeq)
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    } finally release()
   }
 
   /** RESTORE — roll the table back to a retained version (the Delta

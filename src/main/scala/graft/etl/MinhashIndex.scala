@@ -477,15 +477,10 @@ object MinhashIndex {
     * `localCheckpoint` truncates lineage to materialized rows, so block
     * loss fails the job loudly (the streaming batch replays; exactly-once
     * holds by the batch log) instead of diverging. Returns the pinned
-    * frame and a release thunk — `Dataset.unpersist` cannot free a
-    * checkpoint's blocks, so release drops exactly the RDDs pinned since
-    * the call (nesting-safe: each release sees its own baseline). */
+    * frame and its [[graft.core.Pins]] release thunk. */
   private[graft] def pin(df: DataFrame): (DataFrame, () => Unit) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val p = df.localCheckpoint()
-    (p, () => (sc.getPersistentRDDs -- before.toSeq)
-      .values.foreach(_.unpersist(blocking = false)))
+    val release = graft.core.Pins.since(df.sparkSession.sparkContext)
+    (df.localCheckpoint(), release)
   }
 
   private[graft] def writeBucketed(df: DataFrame, table: String, nBuckets: Int,

@@ -312,10 +312,10 @@ object ContinuousIngest {
     // truncates the lineage to the materialized rows, which no catalog
     // mutation can invalidate. (Block loss on a cluster fails the micro-
     // batch, which replays — the normal streaming retry path.)
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val accept = accepted(spark, batch, cfg).localCheckpoint()
-    stamp("accept decided")
+    val release = graft.core.Pins.since(spark.sparkContext)
     try {
+      val accept = accepted(spark, batch, cfg).localCheckpoint()
+      stamp("accept decided")
       if (accept.count() > 0) {
         val useWap = cfg.wapAudit && cfg.batchChecks.nonEmpty
         // Batch-acceptance gate: one scan of the (checkpointed) accept
@@ -447,15 +447,10 @@ object ContinuousIngest {
         } // gatePassed
       }
     } finally {
-      // Dataset.unpersist cannot free a localCheckpoint (the checkpoint
-      // RDD never enters the cache manager; only the GC-driven
-      // ContextCleaner would eventually reclaim it) — so a long-lived
-      // stream would pin one block set per BATCH, for both `accept` and
-      // the gates-internal dedup pin inside accepted(). Drop exactly the
-      // RDDs this batch pinned, once every leg's actions are done.
-      // (Single active stream per session — the foreachBatch contract.)
-      (spark.sparkContext.getPersistentRDDs -- pinnedBefore.toSeq)
-        .values.foreach(_.unpersist(blocking = false))
+      // drop exactly the RDDs this batch pinned — `accept` and the
+      // gates-internal dedup pin inside accepted() — once every leg's
+      // actions are done
+      release()
     }
     if (cfg.compactEvery > 0 && (batchId + 1) % cfg.compactEvery == 0) {
       maintain(spark, cfg)
@@ -483,10 +478,8 @@ object ContinuousIngest {
     // long-lived stream would leak one set per maintenance. Drop exactly
     // what this run pinned once every family has folded (the ingestBatch
     // discipline; nothing reads the set after the bookmark advances).
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    try maintainInner(spark, cfg)
-    finally (spark.sparkContext.getPersistentRDDs -- pinnedBefore.toSeq)
-      .values.foreach(_.unpersist(blocking = false))
+    val release = graft.core.Pins.since(spark.sparkContext)
+    try maintainInner(spark, cfg) finally release()
   }
 
   private def maintainInner(spark: SparkSession, cfg: Config): Unit = {
@@ -617,7 +610,7 @@ object ContinuousIngest {
             .join(docIds.toDF("d"),
               expr(s"vec_id div $span") === col("d"), "left_semi")
             .localCheckpoint()
-        val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+        val release = graft.core.Pins.since(spark.sparkContext)
         try {
           // chunk-level update-reindex: this family is TEXT-derived
           // (chunks embed via the deterministic stand-in in
@@ -649,12 +642,7 @@ object ContinuousIngest {
             cn, reidxId.get))
           if (cfg.annTargetOccupancy > 0)
             LshIndex.regrow(spark, cn, cfg.annTargetOccupancy)
-        } finally {
-          // a localCheckpoint never enters the cache manager; drop the
-          // blocks this maintenance pinned (the ingestBatch discipline)
-          (spark.sparkContext.getPersistentRDDs -- pinnedBefore.toSeq)
-            .values.foreach(_.unpersist(blocking = false))
-        }
+        } finally release() // the blocks this fold pinned
       }
     cfg.sketchName
       .filter(SketchStore.exists(spark, _))

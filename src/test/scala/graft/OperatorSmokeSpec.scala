@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.QueryDef
+import scala.jdk.CollectionConverters._
 
 /** Every declared operator runs at sf0.001 and yields a sane result.
   * (Value-level correctness is the driver's DuckDB oracle gate at sf0.01,
@@ -21,6 +22,31 @@ class OperatorSmokeSpec extends SparkSpec {
   private def leakedPins: Map[Int, org.apache.spark.rdd.RDD[_]] =
     (spark.sparkContext.getPersistentRDDs -- pinnedBaseline.toSeq).toMap
 
+  // Streams, on the same baseline rule: a query must stop every stream
+  // it starts. Most streaming harnesses run in a child session
+  // (`newSession()`), whose queries `spark.streams` does not list, so
+  // the guard also looks for live stream execution threads JVM-wide
+  // (each is named after its query's unique run id).
+  private def streamThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("stream execution thread"))
+      .map(_.getName).toSet
+  private lazy val streamBaseline: (Set[java.util.UUID], Set[String]) =
+    (spark.streams.active.map(_.id).toSet, streamThreads)
+
+  private def leakedStreams: Seq[String] = {
+    def now = spark.streams.active.filterNot(q => streamBaseline._1(q.id))
+      .map(_.toString).toSeq ++ (streamThreads -- streamBaseline._2)
+    // a stopped query's thread may outlive awaitTermination by a moment;
+    // a stream still running after this grace period is a leak
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var live = now
+    while (live.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100); live = now
+    }
+    live
+  }
+
   private val mayBeEmpty = Set(
     "dd_minhash_lsh", "dd_ngram_jaccard", "dd_incremental_neardup",
     "j10_anti_join_not_exists", "p3_date_eq_filter", "p5_calendar_bucket_filter",
@@ -39,13 +65,14 @@ class OperatorSmokeSpec extends SparkSpec {
   SparkEntry.all.foreach { d =>
     val (name, build) = (d.name, d.build)
     test(s"$name runs at sf0.001") {
-      pinnedBaseline // force capture BEFORE the first query runs
+      pinnedBaseline; streamBaseline // force capture BEFORE the first query runs
       val df = build(spark, sf0001)
       val n = df.count()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
       // a query must not squat on executor memory after its action — the
       // round-2 dd_ngram_jaccard persist leaked into ~50 later queries
       assert(leakedPins.isEmpty, s"$name left persisted RDDs behind: $leakedPins")
+      assert(leakedStreams.isEmpty, s"$name left streams running: $leakedStreams")
     }
   }
 
@@ -54,11 +81,12 @@ class OperatorSmokeSpec extends SparkSpec {
   // Verify, and a broken benchBuild silently zeroes a bench number
   SparkEntry.all.filter(_.benchBuild.isDefined).foreach { d =>
     test(s"${d.name} production bench variant runs at sf0.001") {
-      pinnedBaseline // force capture BEFORE the first query runs
+      pinnedBaseline; streamBaseline // force capture BEFORE the first query runs
       d.benchSetup.foreach(_(spark, sf0001)) // untimed artifact builds
       val n = d.benchBuild.get(spark, sf0001).count()
       if (!mayBeEmpty(d.name)) assert(n > 0, s"${d.name} bench variant returned 0 rows")
       assert(leakedPins.isEmpty, s"${d.name} bench variant leaked pins: $leakedPins")
+      assert(leakedStreams.isEmpty, s"${d.name} bench variant left streams running: $leakedStreams")
     }
   }
 }

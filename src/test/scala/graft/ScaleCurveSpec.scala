@@ -108,4 +108,11 @@ class ScaleCurveSpec extends SparkSpec {
     for (q <- Seq("a1_pricing_summary", "j1_inner_equi_join", "dd_exact_dedup"))
       assert(SparkEntry.queries(q)(spark, dir).count() > 0, q)
   }
+
+  test("Bench.measure times a replica query and reports -1 when every rep fails") {
+    assert(Bench.measure(spark, dir, "a1_pricing_summary", reps = 2) > 0)
+    val missing = java.nio.file.Files.createTempDirectory("sc_none").toString
+    assert(Bench.measure(spark, missing, "a1_pricing_summary", reps = 2) == -1.0,
+      "a failed rep must not count as a fast run")
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Measured-claims hygiene: the query counts README.md and SCALE.md
   * advertise must equal the registry — the round-5 verdict caught the
@@ -83,6 +84,27 @@ class SurfaceCountSpec extends AnyFunSuite {
     val missing = ScaleCurve.curveQueries.filterNot(q => scale.contains(s"| $q "))
     assert(missing.isEmpty,
       s"curve queries without a SCALE.md curve-table row: ${missing.mkString(", ")}")
+  }
+
+  test("README's environment table lists exactly the SPARK_GRAFT_* settings the code reads") {
+    // an undocumented setting cannot land, and a removed one cannot
+    // linger in the docs: the set of names under src/main/scala must
+    // equal the set of rows in README's "Environment settings" table
+    val name = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val inCode =
+      try sources.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(p => name.findAllIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+        .toSet
+      finally sources.close()
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8").getLines()
+    val inTable = readme.flatMap(l =>
+      "^\\| `(SPARK_GRAFT_[A-Z0-9_]+)` \\|".r.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(inCode.nonEmpty, "no SPARK_GRAFT_* setting found under src/main/scala")
+    assert(inCode == inTable,
+      s"undocumented: ${(inCode -- inTable).toSeq.sorted.mkString(", ")}; " +
+        s"documented but unread: ${(inTable -- inCode).toSeq.sorted.mkString(", ")}")
   }
 
   test("the rows-only set is exactly the one documented exception") {
