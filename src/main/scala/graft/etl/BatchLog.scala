@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Committed-batch marker log — the single authority every persisted
   * index consults before per-batch maintenance, closing the last
@@ -119,6 +120,35 @@ object BatchLog {
       .collect { case n if n.endsWith(".committed") =>
         n.stripSuffix(".committed") }
       .toSet
+  }
+
+  /** `rows` of a batch-partitioned index minus its UNCOMMITTED orphan
+    * batch partitions (a crashed append's partial rows, invisible until
+    * that batch replays), given the index's batch-partition ids. The
+    * filter names the orphans, not the committed ids: the committed
+    * history grows by one id per batch ever accepted and would bloat
+    * every plan with literals, while the orphans stay tiny. */
+  def committedRows(rows: DataFrame, partIds: Seq[String],
+      committed: String => Boolean): DataFrame = {
+    val orphans = partIds.distinct.filterNot(committed)
+    if (orphans.isEmpty) rows else rows.filter(!col("batch_id").isin(orphans: _*))
+  }
+
+  /** [[committedRows]] of a catalog table. */
+  def committedTable(s: SparkSession, table: String,
+      committed: String => Boolean): DataFrame =
+    committedRows(s.table(table), partitionIds(s, table), committed)
+
+  /** A catalog table's batch-partition ids (first level of the spec). */
+  def partitionIds(s: SparkSession, table: String): Seq[String] =
+    s.sql(s"SHOW PARTITIONS $table").collect()
+      .map(_.getString(0).split("/")(0).stripPrefix("batch_id=")).toSeq.distinct
+
+  /** A directory-backed index's batch-partition ids. */
+  def partitionIdsAt(s: SparkSession, indexPath: String): Seq[String] = {
+    val dir = new Path(indexPath)
+    fs(s, dir).listStatus(dir).map(_.getPath.getName).toSeq
+      .collect { case n if n.startsWith("batch_id=") => n.stripPrefix("batch_id=") }
   }
 
   /** Wipe the log — only valid as part of a full index rebuild (the

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Small-file maintenance for the batch-partitioned bucketed index
-  * tables ([[MinhashIndex]], [[TextIndex]], [[LshIndex]]): every
+  * tables ([[MinhashIndex]], [[TextIndex]], [[LshIndex]]), reached from
+  * the stream through each family's `fold` step in
+  * [[graft.streaming.IndexFamily]]'s maintenance: every
   * [[BatchLog]]-committed append adds one file set per bucket, so a
   * daily-ingest index accretes ~1 file/bucket/batch forever and scan
   * cost degrades with open()-per-file. Compaction folds all COMMITTED
@@ -102,19 +104,11 @@ object IndexCompaction {
       protect: Option[String] = None): Unit = {
     val stage = stageName(table)
     Swap.table(s, stage, table) {
-      // exclusion list = partitions present but not committed (tiny: only
-      // crashed-and-never-retried appends), so the filter never carries
-      // the full committed history into the plan
-      val partIds = s.sql(s"SHOW PARTITIONS $table").collect()
-        .map(_.getString(0).stripPrefix("batch_id="))
-      val orphans = partIds.filterNot(committed).toSeq
       val bucketedRead = "spark.sql.sources.bucketing.enabled"
       val prev = s.conf.get(bucketedRead, "true")
       s.conf.set(bucketedRead, "false")
       try {
-        val live = s.table(table)
-        val nonOrphan = if (orphans.isEmpty) live
-          else live.filter(!col("batch_id").isin(orphans: _*))
+        val nonOrphan = BatchLog.committedTable(s, table, committed)
         // deletes ride the rewrite: an anti/semi-join against the (small
         // or id-column-sized) set — broadcastable, never a corpus shuffle.
         // `protect` exempts ONE committed partition from the delete set —

@@ -146,8 +146,8 @@ object IndexDeleteSync {
     IncrementalGold.writeBookmark(spark, bookmarkPath, toVersion.toString)
 
   /** One full sync cycle: compute the pending set, run `apply` with it
-    * (the caller feeds it to each family's `compact(deletes)` /
-    * `applyDeletes`), then advance the bookmark. */
+    * (the caller feeds it to each family's `compact(deletes)`), then
+    * advance the bookmark. */
   def sync(spark: SparkSession, corpusPath: String, bookmarkPath: String,
       keys: Seq[String], idCol: String = "doc_id")(
       apply: IndexCompaction.DeleteSet => Unit): Option[Report] =

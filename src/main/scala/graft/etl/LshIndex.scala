@@ -241,28 +241,6 @@ object LshIndex {
       deletes.map("vec_id" -> _), targetRowsPerBucket, protect)
   }
 
-  /** Remove `ids` (single vec-id column) from both tables — the
-    * targeted deletion-maintenance entry. */
-  def applyDeletes(s: SparkSession, name: String,
-      ids: DataFrame): Unit =
-    compact(s, name, Some(IndexCompaction.Remove(ids)))
-
-  /** The committed corpus vectors — every live `(vec_id, v)` row,
-    * excluding partitions whose batch never committed (a crashed
-    * append's orphans, the same exclusion [[IndexCompaction.fold]]
-    * applies). What a geometry regrowth derives the new buckets from. */
-  private def committedVectors(s: SparkSession, name: String): DataFrame = {
-    val t = tables(name).vectors
-    val committed = BatchLog.committed(s, BatchLog.logDir(s, name))
-    val orphans = s.sql(s"SHOW PARTITIONS $t").collect()
-      .map(_.getString(0).stripPrefix("batch_id="))
-      .filterNot(committed).toSeq
-    val live = s.table(t)
-    (if (orphans.isEmpty) live
-     else live.filter(!col("batch_id").isin(orphans: _*)))
-      .drop("batch_id")
-  }
-
   /** Grow the index geometry to match the corpus it has accumulated.
     *
     * A streaming index built on its FIRST batch freezes that batch's
@@ -317,7 +295,9 @@ object LshIndex {
     }
     val meta = meta0 - "stale_buckets_table"
     val cur = bucketsTable(meta, name)
-    val vecs = committedVectors(s, name)
+    // the committed vectors: a crashed append's orphans stay out
+    val vecs = BatchLog.committedTable(s, tables(name).vectors,
+      BatchLog.committed(s, BatchLog.logDir(s, name))).drop("batch_id")
     val n = vecs.count()
     val want = autoPlanes(n, targetOccupancy)
     if (want <= meta("planes_per_table").toInt) return false

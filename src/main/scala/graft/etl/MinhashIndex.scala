@@ -123,12 +123,6 @@ object MinhashIndex {
       .saveAsTable(sideTableAt(name, parts))
   }
 
-  private def committedBatchParts(s: SparkSession, table: String,
-      committed: String => Boolean): Set[String] =
-    s.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).split("/")(0).stripPrefix("batch_id="))
-      .toSet.filter(committed)
-
   /** Is the side-table generation at `side` derived from the SAME
     * committed content as the main shingle table? Batch-partition
     * parity is the witness: every maintenance that changes main's
@@ -142,22 +136,8 @@ object MinhashIndex {
       side: String): Boolean = {
     if (!s.catalog.tableExists(side)) return false
     val committed = BatchLog.committed(s, BatchLog.logDir(s, name))
-    committedBatchParts(s, side, committed) ==
-      committedBatchParts(s, tables(name).shingles, committed)
-  }
-
-  /** `table`'s rows minus any UNCOMMITTED orphan batch partitions — a
-    * crashed append's partial rows stay invisible to probes until that
-    * batch replays (the same exclusion the fold and the witnesses
-    * apply). The listing is O(partitions) driver-side; the filter is a
-    * partition predicate, pruned before any row is read. */
-  private def committedRows(s: SparkSession, table: String,
-      committed: String => Boolean): DataFrame = {
-    val orphans = s.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).split("/")(0).stripPrefix("batch_id="))
-      .distinct.filterNot(committed).toSeq
-    val t = s.table(table)
-    if (orphans.isEmpty) t else t.filter(!col("batch_id").isin(orphans: _*))
+    def parts(t: String) = BatchLog.partitionIds(s, t).toSet.filter(committed)
+    parts(side) == parts(tables(name).shingles)
   }
 
   /** Rebuild the side table from the main table's committed rows —
@@ -189,7 +169,7 @@ object MinhashIndex {
     // materialize BEFORE the drop: the derive reads the main table, not
     // the side table, but a lazy plan captured here must not race the
     // catalog mutation below
-    val rows = committedRows(s, tables(name).shingles, committed)
+    val rows = BatchLog.committedTable(s, tables(name).shingles, committed)
       .select(col("doc_id"), col("shingle"),
         shP(col("shingle"), parts).as("sh_p"), col("batch_id"))
     dropTable(s, target)
@@ -564,14 +544,17 @@ object MinhashIndex {
       rowFilter: Column = lit(true)): DataFrame = {
     val perDoc =
       if (perDocTable.nonEmpty) perDocTable else tables(name).sizes
-    val committed = BatchLog.committed(s, BatchLog.logDir(s, name))
-    val orphans = s.sql(s"SHOW PARTITIONS $perDoc").collect()
-      .map(_.getString(0).stripPrefix("batch_id="))
-      .filterNot(committed).toSeq
-    val live = s.table(perDoc)
-    val gens = (if (orphans.isEmpty) live
-      else live.filter(!col("batch_id").isin(orphans: _*)))
-      .filter(rowFilter)
+    staleAmong(candidateIds, BatchLog.committedTable(s, perDoc,
+      BatchLog.committed(s, BatchLog.logDir(s, name))), idExpr, rowFilter)
+  }
+
+  /** The generation-count witness itself, over a family's committed
+    * rows (catalog tables above, the IVF lists directory in
+    * [[graft.operators.IvfIndex.staleGenerationIdsDir]]). */
+  private[graft] def staleAmong(candidateIds: DataFrame,
+      committedRows: DataFrame, idExpr: Column,
+      rowFilter: Column = lit(true)): DataFrame = {
+    val gens = committedRows.filter(rowFilter)
       .groupBy(idExpr.as("doc_id"))
       .agg(count(lit(1)).as("g"))
     candidateIds.toDF("doc_id")
@@ -646,10 +629,10 @@ object MinhashIndex {
         if (!sideHealthy(s, name, side)) reDeriveSide(s, name)
         val pVals = shNewJ.select(shP(col("shingle"), parts).as("p"))
           .distinct().collect().map(_.getLong(0)) // ≤ parts values
-        committedRows(s, side, committed)
+        BatchLog.committedTable(s, side, committed)
           .filter(col("sh_p").isin(pVals: _*))
           .select(col("doc_id"), col("shingle"))
-      } else committedRows(s, t.shingles, committed)
+      } else BatchLog.committedTable(s, t.shingles, committed)
         .select(col("doc_id"), col("shingle"))
     val inter = storedSh
       .select(col("doc_id").as("doc_old"), col("shingle"))
@@ -658,7 +641,7 @@ object MinhashIndex {
       .groupBy(col("doc_old"), col("doc_new"))
       .agg(countDistinct(col("shingle")).as("n_inter"))
     inter
-      .join(committedRows(s, t.sizes, committed)
+      .join(BatchLog.committedTable(s, t.sizes, committed)
         .groupBy(col("doc_id").as("doc_old"))
         .agg(max(col("n_sh")).as("n_old")), "doc_old")
       .join(broadcast(sizesNew

@@ -8,10 +8,9 @@ import org.apache.spark.sql.SparkSession
   * IVF index and lake directories (directory form). The replacement is
   * always written COMPLETE under a stage name before the live copy is
   * touched, and a rename makes it visible — one atomic rename, one
-  * visible version (the Delta Lake rule). Every crash window but one
-  * (marked below) leaves a state that [[healTable]] / [[healDir]]
-  * resolves, and both run before any read or write that could mistake
-  * a window for "absent".
+  * visible version (the Delta Lake rule). Every crash window leaves a
+  * state that [[healTable]] / [[healDir]] resolves, and both run before
+  * any read or write that could mistake a window for "absent".
   *
   * Catalog form, [[table]]: heal, drop the stage, write it, drop live,
   * `ALTER TABLE stage RENAME TO live`, then `RECOVER PARTITIONS` when
@@ -19,14 +18,18 @@ import org.apache.spark.sql.SparkSession
   * but the catalog's partition entries keep their OLD locations, so the
   * renamed table silently reads zero rows until the partitions are
   * re-registered from the moved files (measured: 32 files on disk,
-  * `count() == 0`). Crash windows:
+  * `count() == 0`). So before renaming a partitioned stage the swap
+  * drops a hidden marker file into the stage's directory; the rename
+  * carries it into live's, and it is deleted only after the recover.
+  * Crash windows:
   *  - stage partial or complete, live intact: heal does nothing; the
   *    next swap drops the stage first.
   *  - live dropped, rename not run: the stage is complete by
   *    construction, so heal promotes it. A reader inside the window
   *    fails LOUDLY (table not found), never silently wrong.
-  *  - renamed, partitions not yet recovered: NOT healed — live exists,
-  *    so heal does nothing, and a partitioned table reads zero rows.
+  *  - renamed, partitions not yet recovered: live holds the marker, so
+  *    heal recovers the partitions. A reader that skips heal reads
+  *    zero rows inside the window.
   *
   * Directory form, [[dir]]: the stage is written first, then live →
   * old, stage → live, delete old. Crash windows:
@@ -60,18 +63,37 @@ private[graft] object Swap {
     promote(s, stage, live)
   }
 
-  /** Finish a [[table]] swap that stopped between drop and rename. One
-    * catalog lookup when there is nothing to heal. */
+  /** Finish a [[table]] swap that stopped between drop and rename, or
+    * between rename and recover. One catalog lookup and one file
+    * `exists` when there is nothing to heal. */
   def healTable(s: SparkSession, stage: String, live: String): Unit =
-    if (!s.catalog.tableExists(live) && s.catalog.tableExists(stage))
-      promote(s, stage, live)
+    if (s.catalog.tableExists(live)) {
+      if (fs(s).exists(recoverMarker(s, live))) recover(s, live)
+    } else if (s.catalog.tableExists(stage)) promote(s, stage, live)
 
   private def promote(s: SparkSession, stage: String, live: String): Unit = {
+    val id = s.sessionState.sqlParser.parseTableIdentifier(stage)
+    val partitioned =
+      s.sessionState.catalog.getTableMetadata(id).partitionColumnNames.nonEmpty
+    if (partitioned) fs(s).create(recoverMarker(s, stage), true).close()
     s.sql(s"ALTER TABLE $stage RENAME TO $live")
-    val id = s.sessionState.sqlParser.parseTableIdentifier(live)
-    if (s.sessionState.catalog.getTableMetadata(id).partitionColumnNames.nonEmpty)
-      s.sql(s"ALTER TABLE $live RECOVER PARTITIONS")
+    if (partitioned) recover(s, live)
   }
+
+  private def recover(s: SparkSession, live: String): Unit = {
+    s.sql(s"ALTER TABLE $live RECOVER PARTITIONS")
+    fs(s).delete(recoverMarker(s, live), false)
+  }
+
+  /** Inside the managed table's directory, dot-prefixed so neither
+    * parquet reads nor the partition recover see it. */
+  private def recoverMarker(s: SparkSession, table: String): Path =
+    new Path(new Path(s.sessionState.conf.warehousePath, table.toLowerCase),
+      ".recover-pending")
+
+  private def fs(s: SparkSession): FileSystem =
+    new Path(s.sessionState.conf.warehousePath)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Promote the fully written directory `stage` to `live`, retiring
     * any current `live` through `old` (whose parent must exist). */

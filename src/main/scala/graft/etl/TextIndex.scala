@@ -113,12 +113,6 @@ object TextIndex {
     if (deletes.isDefined) refreshStats(s, t)
   }
 
-  /** Remove `ids` (single doc-id column) from postings and doclens and
-    * refresh the stats row — the targeted deletion-maintenance entry. */
-  def applyDeletes(s: SparkSession, name: String,
-      ids: DataFrame): Unit =
-    compact(s, name, Some(IndexCompaction.Remove(ids)))
-
   /** One batch's postings + doc lengths, batch-tagged and bucketed.
     * Both writes read ONE pinned evaluation of the term-frequency frame
     * ([[MinhashIndex.pin]]: checkpoint, not persist — a lost block fails

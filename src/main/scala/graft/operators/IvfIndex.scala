@@ -272,29 +272,11 @@ object IvfIndex {
   def staleGenerationIdsDir(s: SparkSession, path: String,
       candidateIds: DataFrame): DataFrame = {
     import graft.etl.BatchLog
-    import s.implicits._
-    val committed = BatchLog.committed(s, BatchLog.logDirAt(path))
-    // orphan EXCLUSION, not committed inclusion (the MinhashIndex
-    // witness convention): the committed-id history grows by one per
-    // batch ever accepted and would bloat the plan with literals each
-    // maintenance pass, while the orphan complement — present
-    // partitions minus committed — stays tiny (a crashed append's
-    // leftovers until its replay)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val orphans = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id="))
-      .filterNot(committed).toSeq
-    val live = s.read.parquet(path)
-    val gens = (if (orphans.isEmpty) live
-      else live.filter(!$"batch_id".isin(orphans: _*)))
-      .groupBy($"vec_id".as("doc_id"))
-      .agg(count(lit(1)).as("g"))
-    candidateIds.toDF("doc_id")
-      .join(gens, Seq("doc_id"), "left_outer")
-      .filter($"g".isNull || $"g" =!= 1)
-      .select($"doc_id")
+    graft.etl.MinhashIndex.staleAmong(candidateIds,
+      BatchLog.committedRows(s.read.parquet(path),
+        BatchLog.partitionIdsAt(s, path),
+        BatchLog.committed(s, BatchLog.logDirAt(path))),
+      col("vec_id"))
   }
 
   /** [[searchIndexDir]] with the quantizer resolved FROM the index dir. */

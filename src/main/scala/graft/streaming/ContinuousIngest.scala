@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.etl.{BatchLog, DataQuality, IndexDeleteSync, LshIndex, ManifestTable, MinhashIndex, SketchStore, TextIndex}
+import graft.etl.{DataQuality, IndexDeleteSync, ManifestTable, MinhashIndex}
 import graft.operators.{CorpusPipeline, DedupOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,14 +48,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     no-op, a crash mid-append purges its partial batch partition and
   *     converges on retry. The first non-empty batch BUILDS the index
   *     under its own batch id (build content == append content for it).
-  *     When configured, the SERVING artifacts ride along: a BM25
-  *     postings index ([[TextIndex.append]]) and an LSH ANN index over
-  *     the stream's embedding column ([[LshIndex.append]]), each behind
-  *     its own batch log — three appends, no transaction needed, every
-  *     crash point replays to convergence leg by leg.
+  *     When configured, the other SERVING artifacts ride along, one leg
+  *     per [[IndexFamily]] in [[IndexFamily.enabled]]'s order (BM25,
+  *     doc LSH, IVF, chunk LSH, count-min sketch), each behind its own
+  *     batch log — no transaction needed, every crash point replays to
+  *     convergence leg by leg.
   *  5. MAINTENANCE — every `compactEvery` batches: manifest small-file
-  *     compaction + history vacuum, and index compaction back to one
-  *     file per bucket ([[MinhashIndex.compact]]'s staging-table swap).
+  *     compaction + history vacuum, and each family's
+  *     [[IndexFamily.maintain]] (index compaction back to one file per
+  *     bucket through a staging-table swap, deletes and update-reindex
+  *     riding the fold).
   *     Maintenance never changes visible rows (spec-asserted here and
   *     in ManifestTableSpec/IndexCompactionSpec), so it is safe at any
   *     crash point — a half-done compaction is invisible until its own
@@ -88,14 +90,16 @@ object ContinuousIngest {
     * stream schema and be part of `keys` (the [[ManifestTable]]
     * partition invariant). `compactEvery = 0` disables maintenance.
     *
-    * `textIndexName` / `annIndexName` opt the batch into maintaining the
-    * OTHER serving artifacts a training-data pipeline keeps warm: a BM25
-    * postings index over accepted text and an LSH ANN index over an
-    * embedding column (`embeddingCol`, dim `annDims`, must be present in
-    * the stream schema when `annIndexName` is set). Each family rides
-    * its own committed [[BatchLog]], so the three appends form no
-    * transaction and need none: any crash point replays to convergence
-    * leg by leg (the already-committed legs no-op, the rest run once). */
+    * `textIndexName`, `annIndexName`, `ivfIndexPath`, `chunkIndexName`
+    * and `sketchName` opt the batch into maintaining the OTHER serving
+    * artifacts a training-data pipeline keeps warm, one
+    * [[IndexFamily]] each ([[IndexFamily.enabled]] lists them). The
+    * embedding column (`embeddingCol`) must be present in the stream
+    * schema when `annIndexName` or `ivfIndexPath` is set. Each family
+    * rides its own committed [[graft.etl.BatchLog]], so the appends form
+    * no transaction and need none: any crash point replays to
+    * convergence leg by leg (the already-committed legs no-op, the rest
+    * run once). */
   final case class Config(
       corpusPath: String,
       indexName: String,
@@ -294,7 +298,6 @@ object ContinuousIngest {
     def stamp(stage: String): Unit =
       println(f"[ingest] batch $batchId $stage at ${(System.nanoTime() - tBatch) / 1e9}%.1f s")
     val bid = s"b$batchId"
-    val log = BatchLog.logDir(spark, cfg.indexName)
     // one limit-1 job instead of the full gates+dedup+probe pipeline on
     // an empty drain (measured ~1.1 s of pure job overhead for 0 rows —
     // the steady-state cost of an idle stream polling on a schedule)
@@ -370,72 +373,12 @@ object ContinuousIngest {
             cfg.keys, cfg.dateCol, bloomCols = cfg.bloomCols)
           stamp("merged")
         }
-        if (!BatchLog.isCommitted(spark, log, bid)) {
-          if (spark.catalog.tableExists(s"${cfg.indexName}_banded"))
-            MinhashIndex.append(spark, accept, cfg.indexName, bid)
-          else
-            // exactCandidates opts the cold build into the probe-pruned
-            // side table — appends and probes read the choice from
-            // IndexMeta thereafter
-            MinhashIndex.build(spark, accept, cfg.indexName,
-              buildBatchId = bid, exactProbe = cfg.exactCandidates)
-        }
-        stamp("minhash indexed")
-        // Optional serving artifacts, each exactly-once behind its OWN
-        // batch log (TextIndex/LshIndex.append are runOnce internally —
-        // a replay that already committed a leg no-ops it individually).
-        cfg.textIndexName.foreach { tn =>
-          if (spark.catalog.tableExists(s"${tn}_postings"))
-            TextIndex.append(spark, accept, tn, bid)
-          else TextIndex.build(spark, accept, tn, buildBatchId = bid)
-          stamp("bm25 indexed")
-        }
-        cfg.annIndexName.foreach { an =>
-          val vecs = accept.select(col("doc_id").as("vec_id"),
-            col(cfg.embeddingCol).as("embedding"))
-          // LshIndex.exists, not a fixed-name check: after a geometry
-          // regrowth the generation-0 buckets table is gone and a fixed
-          // name would silently trigger a from-scratch rebuild
-          if (LshIndex.exists(spark, an))
-            LshIndex.append(spark, vecs, an, bid)
-          else LshIndex.build(spark, vecs, an, dims = cfg.annDims,
-            buildBatchId = bid)
-          stamp("ann indexed")
-        }
-        cfg.ivfIndexPath.foreach { p =>
-          val vecs = accept.select(col("doc_id").as("vec_id"),
-            col(cfg.embeddingCol).as("embedding"))
-          // existsDir heals pending swap windows before answering, so a
-          // crash mid-maintenance can never route a batch into a
-          // truncating cold rebuild; append is exactly-once behind the
-          // index's own BatchLog (runOnce), like the other three legs
-          if (graft.operators.IvfIndex.existsDir(spark, p))
-            graft.operators.IvfIndex.appendIndexDir(spark, vecs, p, bid)
-          else
-            // build under the BATCH's id (the LSH/MinHash cold-build
-            // discipline): a replay then finds the id committed and the
-            // append leg no-ops instead of duplicating the build rows
-            graft.operators.IvfIndex.buildIndexDir(spark, vecs, p,
-              k = graft.operators.IvfIndex.autoK(vecs.count()),
-              buildBatchId = bid)
-          stamp("ivf indexed")
-        }
-        cfg.chunkIndexName.foreach { cn =>
-          val chunks = graft.operators.SimilarityOps
-            .chunkIndexFrame(spark, accept, cfg.chunkDims)
-          if (LshIndex.exists(spark, cn))
-            LshIndex.append(spark, chunks, cn, bid)
-          else LshIndex.build(spark, chunks, cn, dims = cfg.chunkDims,
-            buildBatchId = bid)
-          stamp("chunks indexed")
-        }
-        cfg.sketchName.foreach { sn =>
-          if (SketchStore.exists(spark, sn))
-            SketchStore.append(spark, accept, sn, bid)
-          else SketchStore.build(spark, accept, sn,
-            depth = cfg.sketchDepth, width = cfg.sketchWidth,
-            buildBatchId = bid)
-          stamp("sketch appended")
+        // the serving artifacts, in leg order, each exactly-once behind
+        // its OWN batch log: a replay that already committed a leg
+        // no-ops it individually
+        IndexFamily.enabled(cfg).foreach { f =>
+          f.ingest(spark, accept, bid)
+          stamp(f.stamp)
         }
         // Post-merge standing health report: the metadata-provable
         // checks open ZERO data files (a driver-side fold over the
@@ -473,11 +416,11 @@ object ContinuousIngest {
     * BEFORE vacuum, so the CDC diff window the bookmark points into is
     * never reclaimed out from under the sync. */
   private[graft] def maintain(spark: SparkSession, cfg: Config): Unit = {
-    // the deletion-sync diff set (and the chunk translation inside) are
-    // localCheckpoints — pinned blocks the cache manager never frees; a
-    // long-lived stream would leak one set per maintenance. Drop exactly
-    // what this run pinned once every family has folded (the ingestBatch
-    // discipline; nothing reads the set after the bookmark advances).
+    // the deletion-sync diff set is a localCheckpoint — pinned blocks
+    // the cache manager never frees; a long-lived stream would leak one
+    // set per maintenance. Drop exactly what this run pinned once every
+    // family has folded (the ingestBatch discipline; nothing reads the
+    // set after the bookmark advances).
     val release = graft.core.Pins.since(spark.sparkContext)
     try maintainInner(spark, cfg) finally release()
   }
@@ -489,275 +432,10 @@ object ContinuousIngest {
         IndexDeleteSync.pendingFull(spark, cfg.corpusPath,
           deleteBookmarkPath(cfg), cfg.keys)
       } else None
-    val ds = sync.flatMap(_.deletes)
-    val reidxId = sync.map(ss => s"reidx-v${ss.toVersion}")
-    // UPDATE-REINDEX: changed docs additionally purge their SUPERSEDED
-    // index generations and re-append the current version from the CDC
-    // feed's new-side rows — without this, an updated doc keeps BOTH
-    // generations' rows under one id (ghost candidates for copies of
-    // retired text, double-counted shingle intersections, stale vectors
-    // serving ANN probes). The stale set is the CDC insert∪update
-    // CANDIDATES intersected with each family's own multi-generation
-    // ids (insert rows matter too: a doc inserted and then updated
-    // within ONE window net-diffs to a single insert, yet its index
-    // holds both generations). The purge rides the fold each family's
-    // compaction performs anyway; the re-append is exactly-once behind
-    // the family's batch log under the version-derived `reidx-v<N>` id,
-    // and the fold PROTECTS that partition from its own Remove set so
-    // every crash window (before append, mid-append, after append but
-    // before the bookmark) replays to convergence.
-    //
-    // Text-derived families (MinHash, BM25, and the chunk index —
-    // whose stand-in embeddings derive deterministically from chunk
-    // text) reindex from the CDC rows' text. EMBEDDING-carried families
-    // (doc-level LSH, IVF) join the protocol when the corpus rows CARRY
-    // the embedding column (the stream fed it, the merge persisted it —
-    // the CDC new-side rows then hold the current vectors); a corpus
-    // without that column is fed by an external encoder pipeline, and
-    // its vector staleness is that seam's to close (documented
-    // asymmetry, delete-only here).
-    val candidates = sync.flatMap(_.reindex)
-    // The replay decision is PER FAMILY: each text-derived family
-    // intersects the CDC candidates with a stale-generation witness
-    // computed from ITS OWN per-doc table and batch log, so a crash
-    // between the MinHash leg and the TextIndex leg replays each leg to
-    // convergence independently. (A shared MinHash-only witness computed
-    // once would report "healthy" after the MinHash re-append committed,
-    // stranding the text index either double-generationed forever —
-    // crash before its compact — or missing the updated docs entirely —
-    // crash between its compact and its append.)
-    def staleFor(famName: String, perDocTable: String,
-        idExpr: org.apache.spark.sql.Column = col("doc_id"),
-        rowFilter: org.apache.spark.sql.Column = lit(true))
-        : Option[DataFrame] =
-      candidates.flatMap { cand =>
-        val stale = cand.join(
-          MinhashIndex.staleGenerationIds(spark, famName,
-            cand.select(col("doc_id")), perDocTable, idExpr, rowFilter),
-          Seq("doc_id"), "left_semi").localCheckpoint()
-        if (stale.isEmpty) None else Some(stale)
-      }
-    // embedding-family reindex feed: only when the corpus rows carry
-    // the vectors (see the protocol note above)
-    def vecCandidates: Boolean =
-      candidates.exists(_.columns.contains(cfg.embeddingCol))
-    def withReindex(upd: Option[DataFrame])
-        : Option[graft.etl.IndexCompaction.DeleteSet] = (ds, upd) match {
-      case (d, None) => d
-      case (Some(graft.etl.IndexCompaction.Remove(ids)), Some(u)) =>
-        Some(graft.etl.IndexCompaction.Remove(
-          ids.toDF("doc_id").unionByName(u.select(col("doc_id"))).distinct()))
-      case (None, Some(u)) =>
-        Some(graft.etl.IndexCompaction.Remove(
-          u.select(col("doc_id")).distinct()))
-      case (retain, Some(_)) => retain // unreachable: reconcile carries no diff
-    }
-    if (spark.catalog.tableExists(s"${cfg.indexName}_banded")) {
-      val reindexMh = staleFor(cfg.indexName, s"${cfg.indexName}_sizes")
-      MinhashIndex.compact(spark, cfg.indexName, withReindex(reindexMh),
-        cfg.storageRowsPerBucket, if (reindexMh.isDefined) reidxId else None)
-      reindexMh.foreach(upd =>
-        MinhashIndex.append(spark, upd, cfg.indexName, reidxId.get))
-    }
-    cfg.textIndexName
-      .filter(tn => spark.catalog.tableExists(s"${tn}_postings"))
-      .foreach { tn =>
-        val reindexTxt = staleFor(tn, s"${tn}_doclens")
-        TextIndex.compact(spark, tn, withReindex(reindexTxt),
-          cfg.storageRowsPerBucket,
-          if (reindexTxt.isDefined) reidxId else None)
-        reindexTxt.foreach(upd => TextIndex.append(spark, upd, tn, reidxId.get))
-      }
-    cfg.annIndexName
-      .filter(an => LshIndex.exists(spark, an))
-      .foreach { an =>
-        // EMBEDDING-family update-reindex (the text families' protocol,
-        // per-family witness from this family's OWN vectors table): an
-        // updated doc's stale VECTOR otherwise keeps serving ANN probes
-        // until the doc is deleted — the one index-staleness class the
-        // text-side reindex can't reach, since vectors aren't derivable
-        // from the text diff. The current embedding rides the CDC rows.
-        val reindexAnn =
-          if (vecCandidates) staleFor(an, s"${an}_vectors", col("vec_id"))
-          else None
-        LshIndex.compact(spark, an, withReindex(reindexAnn),
-          cfg.storageRowsPerBucket,
-          if (reindexAnn.isDefined) reidxId else None)
-        reindexAnn.foreach(upd => LshIndex.append(spark,
-          upd.select(col("doc_id").as("vec_id"),
-            col(cfg.embeddingCol).as("embedding")), an, reidxId.get))
-        // geometry follows corpus growth — after the fold (fewer files
-        // to read for the vector count), widen the planes if the
-        // accumulated corpus has outgrown the recorded sizing
-        if (cfg.annTargetOccupancy > 0)
-          LshIndex.regrow(spark, an, cfg.annTargetOccupancy)
-      }
-    cfg.chunkIndexName
-      .filter(cn => LshIndex.exists(spark, cn))
-      .foreach { cn =>
-        // the corpus delete feed is DOC-level; this family's rows are
-        // chunk-level. Translate by deriving each stored chunk's source
-        // doc from its composite id — an id-column-only read of the
-        // vectors table the fold is about to rewrite anyway, so the
-        // translation costs one extra column scan, not a corpus pass.
-        val span = graft.operators.SimilarityOps.ChunkIdSpan
-        // localCheckpoint is load-bearing: the translation reads the
-        // very vectors table the fold swaps out, and the family's
-        // SECOND table (buckets) would otherwise re-derive the set from
-        // the already-purged vectors — an empty remove set, ghosts kept
-        def chunkIdsOf(docIds: org.apache.spark.sql.DataFrame) =
-          spark.table(s"${cn}_vectors").select(col("vec_id"))
-            .join(docIds.toDF("d"),
-              expr(s"vec_id div $span") === col("d"), "left_semi")
-            .localCheckpoint()
-        val release = graft.core.Pins.since(spark.sparkContext)
-        try {
-          // chunk-level update-reindex: this family is TEXT-derived
-          // (chunks embed via the deterministic stand-in in
-          // [[graft.operators.SimilarityOps.chunkIndexFrame]]), so it
-          // reindexes whenever the text families do — no embedding
-          // column needed. The witness maps stored chunk ids back to
-          // their source docs and counts each generation's single
-          // chunk-0 row (variable chunk counts — and folds that
-          // collapse batch partitions — can't masquerade as extra
-          // generations); the purge removes EVERY stored chunk of a
-          // stale doc — both generations', the current one included,
-          // since chunk boundaries move with the text — and the
-          // re-append re-chunks + re-embeds the CURRENT rows under the
-          // protected reidx partition.
-          val reindexChunk =
-            staleFor(cn, s"${cn}_vectors", expr(s"vec_id div $span"),
-              expr(s"vec_id % $span = 0"))
-          val chunkDs = withReindex(reindexChunk).map {
-            case graft.etl.IndexCompaction.Remove(ids) =>
-              graft.etl.IndexCompaction.Remove(chunkIdsOf(ids))
-            case graft.etl.IndexCompaction.Retain(ids) =>
-              graft.etl.IndexCompaction.Retain(chunkIdsOf(ids))
-          }
-          LshIndex.compact(spark, cn, chunkDs, cfg.storageRowsPerBucket,
-            if (reindexChunk.isDefined) reidxId else None)
-          reindexChunk.foreach(upd => LshIndex.append(spark,
-            graft.operators.SimilarityOps
-              .chunkIndexFrame(spark, upd, cfg.chunkDims),
-            cn, reidxId.get))
-          if (cfg.annTargetOccupancy > 0)
-            LshIndex.regrow(spark, cn, cfg.annTargetOccupancy)
-        } finally release() // the blocks this fold pinned
-      }
-    cfg.sketchName
-      .filter(SketchStore.exists(spark, _))
-      .foreach { sn =>
-        sync.foreach { ss =>
-          ss.deletes match {
-            case Some(graft.etl.IndexCompaction.Retain(_)) =>
-              // diff window vacuumed: pre-image text unknowable — rebuild
-              // from the live corpus, the reconcile sweep's cost class
-              SketchStore.build(spark, ManifestTable.read(spark, cfg.corpusPath),
-                sn, depth = cfg.sketchDepth, width = cfg.sketchWidth)
-            case _ =>
-              // the sketch subtracts CONTENT, not ids: the pre-image text
-              // of DELETED and CHANGED docs reads from the bookmarked
-              // snapshot — within vacuum retention by construction on the
-              // CDC path. Subtract-old is the WHOLE update story here: the
-              // per-batch ingest leg already appended the new generation's
-              // content when the update batch was accepted, so re-adding
-              // it would double-count (the sketch has no id-keyed rows to
-              // purge, unlike the index families). Inserted-only ids in
-              // the candidate set are absent from the pre-image and
-              // subtract nothing; a generation superseded WITHIN one
-              // window leaves its content counted until a rebuild — CMS
-              // estimates stay upper bounds either way (the turnstile
-              // floor is untouched), the documented overestimate class.
-              // The version-derived batch id keys exactly-once: a
-              // maintenance replay no-ops.
-              val delIds = ss.deletes.map(_.ids.toDF("g_id"))
-              val candIds = candidates.map(_.select(col("doc_id").as("g_id")))
-              val gone = (delIds, candIds) match {
-                case (Some(d), Some(u)) => Some(d.unionByName(u).distinct())
-                case (d, u) => d.orElse(u)
-              }
-              gone.foreach { ids =>
-                val pre = ManifestTable
-                  .readAt(spark, cfg.corpusPath, ss.report.fromVersion)
-                  .join(ids, col("doc_id") === col("g_id"), "left_semi")
-                SketchStore.applyDeletes(spark, pre, sn, s"del-v${ss.toVersion}")
-              }
-          }
-        }
-        // grid compaction: any number of batch partitions (and pending
-        // negative cells) fold back to one d×w grid
-        SketchStore.fold(spark, sn)
-        // reconcile sweep: exact-count the corpus's top tokens (one
-        // scan) and check the folded grid both ways. ONLY the
-        // turnstile floor (estimate ≥ exact) triggers a rebuild: it is
-        // deterministic under a strict turnstile, so a violation PROVES
-        // over-deletion or corruption. The e/w ceiling is advisory-only
-        // — it holds per token with probability 1−e^−d, and hash
-        // collisions are deterministic for a given corpus, so a healthy
-        // grid can exceed it on EVERY sweep; rebuilding on it would
-        // reproduce the identical grid and flap forever. A failing grid
-        // heals by rebuild from the live corpus, the vacuumed-window
-        // path's cost class. Advisory-loud, never throws: the corpus is
-        // the source of truth and stays untouched either way.
-        if (cfg.sketchAuditTokens > 0 &&
-            ManifestTable.versions(spark, cfg.corpusPath).nonEmpty) {
-          val corpus = ManifestTable.read(spark, cfg.corpusPath)
-          val report = SketchStore
-            .audit(spark, corpus, sn, cfg.sketchAuditTokens)
-            .select(col("under_ok"), col("over_ok"))
-            .collect() // ≤ sketchAuditTokens rows by construction
-          val floorBad = report.count(_.getLong(0) == 0L)
-          val ceilBad = report.count(_.getLong(1) == 0L)
-          if (ceilBad > 0)
-            println(s"[ingest] sketch $sn: $ceilBad sampled tokens over " +
-              "the e/w ceiling (expected for collided tokens; advisory)")
-          if (floorBad > 0) {
-            println(s"[ingest] sketch $sn FAILED reconcile audit " +
-              s"($floorBad sampled tokens under the turnstile floor — " +
-              "over-deletion or corruption) — rebuilding from corpus")
-            SketchStore.build(spark, corpus, sn,
-              depth = cfg.sketchDepth, width = cfg.sketchWidth)
-          }
-        }
-      }
-    cfg.ivfIndexPath
-      .filter(graft.operators.IvfIndex.existsDir(spark, _))
-      .foreach { p =>
-        // IVF update-reindex: the witness counts committed rows per
-        // vec_id from the family's OWN lists (rows survive folds and
-        // retrains, so generations can't hide in a collapsed
-        // partition); stale candidates join the delete feed, then the
-        // current vectors re-append against the persisted quantizer
-        // under the version-derived reidx id. Ordering purge-then-
-        // append + the witness makes every crash window replay to
-        // convergence without a protect partition: the staged-rename
-        // fold is atomic, and a replay after the re-append committed
-        // computes a healthy witness (g = 1), so nothing re-purges the
-        // replacement.
-        val reindexIvf =
-          if (vecCandidates)
-            candidates.flatMap { cand =>
-              val stale = cand.join(
-                graft.operators.IvfIndex.staleGenerationIdsDir(spark, p,
-                  cand.select(col("doc_id"))),
-                Seq("doc_id"), "left_semi").localCheckpoint()
-              if (stale.isEmpty) None else Some(stale)
-            }
-          else None
-        val ivfDs = withReindex(reindexIvf)
-        // ONE rewrite either way: a triggered retrain is itself the
-        // family's fold (and applies the delete set to the survivors it
-        // trains on); when the quantizer still covers the corpus, the
-        // fold-with-deletes runs only if there is something to purge —
-        // an idle maintenance pass costs this family nothing
-        if (!graft.operators.IvfIndex.retrainIndexDir(spark, p, deletes = ivfDs)
-            && ivfDs.isDefined)
-          graft.operators.IvfIndex.compactIndexDir(spark, p, ivfDs)
-        reindexIvf.foreach(upd => graft.operators.IvfIndex.appendIndexDir(
-          spark,
-          upd.select(col("doc_id").as("vec_id"),
-            col(cfg.embeddingCol).as("embedding")), p, reidxId.get))
-      }
+    // deletes and update-reindex reach every family through the same
+    // sync set, each family deciding its replay from its own state
+    // ([[KeyedFamily]] has the protocol)
+    IndexFamily.enabled(cfg).foreach(_.maintain(spark, sync))
     sync.foreach(ss =>
       IndexDeleteSync.advance(spark, deleteBookmarkPath(cfg), ss.toVersion))
     if (ManifestTable.versions(spark, cfg.corpusPath).nonEmpty)

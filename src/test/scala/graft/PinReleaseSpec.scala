@@ -47,13 +47,19 @@ class PinReleaseSpec extends SparkSpec {
         "embedding")
 
   test("ingestBatch and maintain with a pending delete release their pins") {
-    val corpus = Files.createTempDirectory("pins_ci").toString + "/corpus"
-    val (mh, ti, ann, ck) = ("pins_mh", "pins_ti", "pins_ann", "pins_ck")
+    // every IndexFamily is enabled, so each family's ingest and
+    // maintenance step runs here
+    val root = Files.createTempDirectory("pins_ci").toString
+    val (corpus, ivf) = (root + "/corpus", root + "/ivf")
+    val (mh, ti, ann, ck, sk) =
+      ("pins_mh", "pins_ti", "pins_ann", "pins_ck", "pins_sk")
     val cfg = ContinuousIngest.Config(corpusPath = corpus, indexName = mh,
       textIndexName = Some(ti), annIndexName = Some(ann), annDims = 8,
-      chunkIndexName = Some(ck))
+      ivfIndexPath = Some(ivf), chunkIndexName = Some(ck), sketchName = Some(sk))
     def sizes(): Set[Long] = spark.table(s"${mh}_sizes")
       .select($"doc_id").collect().map(_.getLong(0)).toSet
+    def ivfIds(): Set[Long] = spark.read.parquet(ivf)
+      .select($"vec_id").collect().map(_.getLong(0)).toSet
     try {
       assertNoNewPins("the cold ingestBatch") {
         ContinuousIngest.ingestBatch(spark, frame(1L to 8L), 0, cfg)
@@ -70,12 +76,17 @@ class PinReleaseSpec extends SparkSpec {
       }
       assert(sizes() == (1L to 12L).toSet -- Set(2L, 9L),
         "the delete reached the index, so the pinning fold ran")
+      assert(ivfIds() == (1L to 12L).toSet -- Set(2L, 9L),
+        "the delete reached the IVF lists too")
     } finally {
-      Seq(mh, ti, ann).flatMap(n => Seq("banded", "shingles", "sizes",
-        "postings", "doclens", "stats", "buckets", "vectors", "meta")
+      Seq(mh, ti, ann, sk).flatMap(n => Seq("banded", "shingles", "sizes",
+        "postings", "doclens", "stats", "buckets", "vectors", "cells", "meta")
         .map(t => s"${n}_$t"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       LshIndex.dropAll(spark, ck)
+      val ivfDir = new org.apache.hadoop.fs.Path(ivf)
+      ivfDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(ivfDir, true)
     }
   }
 

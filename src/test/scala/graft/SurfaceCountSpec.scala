@@ -107,6 +107,25 @@ class SurfaceCountSpec extends AnyFunSuite {
         s"documented but unread: ${(inTable -- inCode).toSeq.sorted.mkString(", ")}")
   }
 
+  test("every ingest stamp the benchmark's tracer reads is a key of its legOf map") {
+    // perfbench's Tracer attributes an ingest batch's jobs to legs by the
+    // stamp text ingestBatch prints; a renamed stamp would zero its leg
+    // without any error. The tracer's file is only read here.
+    val tracer = scala.io.Source.fromFile(
+      "perfbench/src/main/scala/perfbench/Tracer.scala", "UTF-8").mkString
+    val legOf = "val legOf = Map\\(([^)]*)\\)".r.findFirstMatchIn(tracer)
+      .map(_.group(1)).getOrElse(fail("no legOf map in Tracer.scala"))
+    val keys = "\"([^\"]+)\" ->".r.findAllMatchIn(legOf).map(_.group(1)).toSet
+    val all = graft.streaming.ContinuousIngest.Config(corpusPath = "c",
+      indexName = "i", textIndexName = Some("t"), annIndexName = Some("a"),
+      ivfIndexPath = Some("v"), chunkIndexName = Some("k"), sketchName = Some("s"))
+    val familyStamps = graft.streaming.IndexFamily.enabled(all).map(_.stamp)
+    assert(familyStamps.size == 6, s"six families, got $familyStamps")
+    val missing = (familyStamps ++ Seq("accept decided", "merged",
+      "maintenance done")).filterNot(keys)
+    assert(missing.isEmpty, s"stamps the tracer does not map: ${missing.mkString(", ")}")
+  }
+
   test("the rows-only set is exactly the one documented exception") {
     val rowsOnlyNames = SparkEntry.all.filter(_.oracle.isEmpty).map(_.name).toSet
     assert(rowsOnlyNames == Set("a15_approx_count_distinct"),
