@@ -33,6 +33,28 @@ final case class QueryDef(
 
 trait QueryModule { def defs: Seq[QueryDef] }
 
+/** On-disk scratch for the query modules whose builds stage fixtures
+  * (streaming replays, lake tables, the ingest pipeline). */
+object Scratch {
+
+  /** `sfDir` with every non-alphanumeric character as `_`: a path
+    * component or identifier suffix per sf dir. */
+  def safe(sfDir: String): String = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** `<java.io.tmpdir>/<area>/<tag>_<safe sfDir>`: one directory per
+    * (fixture, sf dir), so Verify (sf0.01) and the specs (sf0.001) never
+    * share state. */
+  def dir(area: String, tag: String, sfDir: String): String =
+    s"${sys.props("java.io.tmpdir")}/$area/${tag}_${safe(sfDir)}"
+
+  /** Recursive delete of `path`; a no-op when it is absent. */
+  def wipe(s: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+}
+
 /** Testdata table loader. Tables are single parquet files per TESTDATA.md.
   *
   * Every load is checked against a per-table column contract — the

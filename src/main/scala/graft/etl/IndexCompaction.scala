@@ -72,6 +72,32 @@ object IndexCompaction {
   def heal(s: SparkSession, table: String): Unit =
     Swap.healTable(s, stageName(table), table)
 
+  /** Does a complete, servable index `name` with serving `tables`
+    * exist? The existence probe for callers deciding build-vs-append.
+    *
+    * HEALS before answering: a fold's drop→rename window leaves a table
+    * only under its `__compact` stage, and a plain tableExists probe
+    * there answers false — the caller then rebuilds from ONE batch,
+    * silently truncating the index (or, for a missing sibling table,
+    * the append recreates it holding one batch). A table still missing
+    * after the heal is fine only while nothing was ever committed (a
+    * cold build crashed between its table writes; the retry's rebuild
+    * loses nothing). With committed batches on record no crash window
+    * explains it, and the answer is a LOUD error, never a rebuild
+    * trigger. Catalog and file lookups only, no Spark job. */
+  def exists(s: SparkSession, name: String, tables: Seq[String]): Boolean = {
+    tables.foreach(heal(s, _))
+    val missing = tables.filterNot(s.catalog.tableExists)
+    missing.isEmpty || {
+      val committed = BatchLog.committed(s, BatchLog.logDir(s, name))
+      require(committed.isEmpty,
+        s"index '$name' has ${committed.size} committed batches but " +
+          s"${missing.mkString(" / ")} missing even after heal — a rebuild " +
+          "would truncate the index to one batch; investigate instead")
+      false
+    }
+  }
+
   /** Parquet file count across a table's partitions — the maintenance
     * trigger (compact when it drifts far above the bucket count), from
     * listStatus metadata only. */

@@ -54,18 +54,9 @@ object LshIndex {
     * existence probe for callers deciding build-vs-append: after a
     * geometry regrowth the generation-0 `<name>_buckets` no longer
     * exists, so checking that fixed name would silently trigger a full
-    * rebuild.
-    *
-    * HEALS before answering: every maintenance swap in the family has a
-    * crash window in which a table is transiently absent (IndexMeta's
-    * drop→rename leaves only `_meta__new`; a compaction fold's
-    * drop→rename leaves only the `__compact` stage) — a plain
-    * tableExists probe in that window answers false, and a
-    * build-vs-append caller then rebuilds from ONE batch, silently
-    * truncating the accumulated index. Finishing the pending renames
-    * first makes the answer reflect the index's durable state. A state
-    * no heal explains — committed batches on record but a serving table
-    * still missing — is a LOUD error, never a rebuild trigger. */
+    * rebuild. The meta heals first (IndexMeta's drop→rename leaves
+    * only `_meta__new`), then the serving tables answer through
+    * [[IndexCompaction.exists]]'s heal-then-answer rule. */
   def exists(s: SparkSession, name: String): Boolean = {
     val t = tables(name)
     if (!IndexMeta.exists(s, name)) {
@@ -80,24 +71,8 @@ object LshIndex {
           "'absent' (a rebuild would drop the stored vectors)")
       return false
     }
-    val meta = IndexMeta.read(s, name)
-    val bt = bucketsTable(meta, name)
-    IndexCompaction.heal(s, bt)
-    IndexCompaction.heal(s, t.vectors)
-    if (s.catalog.tableExists(bt) && s.catalog.tableExists(t.vectors)) true
-    else {
-      // meta present, a serving table missing even after heal: fine iff
-      // nothing was ever committed (a cold build crashed between its
-      // meta write and its table writes — the retry's rebuild loses
-      // nothing); with committed batches on record it is data loss.
-      val committed = BatchLog.committed(s, BatchLog.logDir(s, name))
-      require(committed.isEmpty,
-        s"LSH index '$name' has meta and ${committed.size} committed " +
-          s"batches but a serving table is missing ($bt / ${t.vectors}) " +
-          "even after heal — a rebuild would truncate the index to one " +
-          "batch; investigate instead")
-      false
-    }
+    IndexCompaction.exists(s, name,
+      Seq(bucketsTable(IndexMeta.read(s, name), name), t.vectors))
   }
 
   /** Drop every table of the family — vectors, meta, the CURRENT

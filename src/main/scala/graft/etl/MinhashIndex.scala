@@ -50,6 +50,13 @@ object MinhashIndex {
   def tables(name: String): Tables =
     Tables(s"${name}_banded", s"${name}_shingles", s"${name}_sizes")
 
+  /** The build-vs-append probe: [[IndexCompaction.exists]] over the
+    * three tables. */
+  def exists(s: SparkSession, name: String): Boolean = {
+    val t = tables(name)
+    IndexCompaction.exists(s, name, Seq(t.banded, t.shingles, t.sizes))
+  }
+
   /** OPT-IN side table for the exact cross-batch probe
     * ([[exactIncrementalPairs]]): the same (doc_id, shingle) rows as
     * `_shingles`, laid out for the OTHER access pattern — partitioned

@@ -43,6 +43,13 @@ object TextIndex {
   def tables(name: String): Tables =
     Tables(s"${name}_postings", s"${name}_doclens", s"${name}_stats")
 
+  /** The build-vs-append probe: [[IndexCompaction.exists]] over the two
+    * folded tables (the stats row heals on its own swap at read). */
+  def exists(s: SparkSession, name: String): Boolean = {
+    val t = tables(name)
+    IndexCompaction.exists(s, name, Seq(t.postings, t.doclens))
+  }
+
   private def termFrequencies(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), explode(DedupOps.tokens(col("text"))).as("token"))
     .groupBy(col("doc_id"), col("token"))

@@ -207,10 +207,8 @@ object IvfIndex {
     import graft.etl.{BatchLog, IndexCompaction}
     import s.implicits._
     heal(s, path)
-    val committed = BatchLog.committed(s, BatchLog.logDirAt(path))
-    val lists0 = s.read.parquet(path)
-      .filter($"batch_id".isin(committed.toSeq: _*))
-      .select($"cluster_id", $"vec_id", $"v")
+    val (committed, rows) = committedLists(s, path)
+    val lists0 = rows.select($"cluster_id", $"vec_id", $"v")
     val lists = deletes.fold(lists0)(ds =>
       IndexCompaction.applyDeleteSet(lists0, "vec_id", ds))
     val centroids = readCentroids(s, path).localCheckpoint() // pre-swap pin
@@ -271,12 +269,20 @@ object IvfIndex {
     * Cost: a two-column scan of the lists, O(index vectors). */
   def staleGenerationIdsDir(s: SparkSession, path: String,
       candidateIds: DataFrame): DataFrame = {
-    import graft.etl.BatchLog
     graft.etl.MinhashIndex.staleAmong(candidateIds,
-      BatchLog.committedRows(s.read.parquet(path),
-        BatchLog.partitionIdsAt(s, path),
-        BatchLog.committed(s, BatchLog.logDirAt(path))),
-      col("vec_id"))
+      committedLists(s, path)._2, col("vec_id"))
+  }
+
+  /** The committed batch ids and the lists' rows minus the uncommitted
+    * orphan batch partitions (a crashed append's partial rows) —
+    * [[graft.etl.BatchLog.committedRows]]' form, whose filter names the
+    * few orphans rather than every batch ever accepted. */
+  private def committedLists(s: SparkSession,
+      path: String): (Set[String], DataFrame) = {
+    import graft.etl.BatchLog
+    val committed = BatchLog.committed(s, BatchLog.logDirAt(path))
+    (committed, BatchLog.committedRows(s.read.parquet(path),
+      BatchLog.partitionIdsAt(s, path), committed))
   }
 
   /** [[searchIndexDir]] with the quantizer resolved FROM the index dir. */
@@ -348,10 +354,8 @@ object IvfIndex {
     import s.implicits._
     require(growFactor >= 1.0, "growFactor must be >= 1")
     heal(s, path)
-    val committed = BatchLog.committed(s, BatchLog.logDirAt(path))
-    val vecs0 = s.read.parquet(path)
-      .filter($"batch_id".isin(committed.toSeq: _*))
-      .select($"vec_id", $"v")
+    val (committed, rows) = committedLists(s, path)
+    val vecs0 = rows.select($"vec_id", $"v")
     val vecs = deletes.fold(vecs0)(ds =>
       graft.etl.IndexCompaction.applyDeleteSet(vecs0, "vec_id", ds))
     val n = vecs.count()

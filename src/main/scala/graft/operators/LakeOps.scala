@@ -22,24 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object LakeOps extends QueryModule {
 
-  /** Per-variant scratch table path, derived from the sf dir so Verify
-    * (sf0.01) and specs (sf0.001) never share state. */
-  private def lakeDir(sfDir: String, tag: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_lake/${tag}_$safe"
-  }
+  /** Per-variant scratch table path ([[Scratch.dir]]). */
+  private def lakeDir(sfDir: String, tag: String): String =
+    Scratch.dir("graft_lake", tag, sfDir)
 
-  private def wipe(s: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
 
   /** orders → manifest table, clustered-compacted on `o_custkey` with a
     * small file target so each partition really holds several
     * range-disjoint files for the zone maps to eliminate between. */
   private def buildZoneTable(s: SparkSession, dir: String, path: String): Unit = {
-    wipe(s, path)
+    Scratch.wipe(s, path)
     ManifestTable.mergeInto(s, T(s, dir, "orders"), path,
       keys = Seq("o_orderkey", "o_orderdate"), dateCol = "o_orderdate")
     ManifestTable.compact(s, path, targetFileBytes = 16L * 1024,
@@ -80,7 +72,7 @@ object LakeOps extends QueryModule {
     * so min/max ranges overlap everywhere — only the Bloom sidecars can
     * eliminate files for a point lookup. */
   private def buildBloomTable(s: SparkSession, dir: String, path: String): Unit = {
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val tagged = T(s, dir, "orders").withColumn("o_okey_tag",
       concat(lit("ok-"), col("o_orderkey").cast("string")))
     ManifestTable.mergeInto(s, tagged, path,
@@ -165,7 +157,7 @@ object LakeOps extends QueryModule {
     * base; all other columns ride `MergeService`'s updateAll carry. */
   private def buildVersioned(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val orders = T(s, dir, "orders")
     val keys = Seq("o_orderkey", "o_orderdate")
     ManifestTable.mergeInto(s, orders, path, keys, dateCol = "o_orderdate")
@@ -244,7 +236,7 @@ object LakeOps extends QueryModule {
     * file, no data file rewritten. */
   private def buildMorTable(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     ManifestTable.mergeInto(s, T(s, dir, "orders"), path,
       keys = Seq("o_orderkey", "o_orderdate"), dateCol = "o_orderdate")
     ManifestTable.deleteWhereMoR(s, path, $"o_orderkey" % 10 === 3,
@@ -290,7 +282,7 @@ object LakeOps extends QueryModule {
     * read must null-fill them from the evolved snapshot schema. */
   private def buildEvolved(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val orders = T(s, dir, "orders")
     val keys = Seq("o_orderkey", "o_orderdate")
     ManifestTable.mergeInto(s, orders, path, keys, dateCol = "o_orderdate")
@@ -348,7 +340,7 @@ object LakeOps extends QueryModule {
     val keys = Seq("o_orderkey", "o_orderdate")
     buildVersioned(s, dir, primary)
     ManifestTable.deleteWhereMoR(s, primary, $"o_orderkey" % 10 === 6, keys)
-    wipe(s, replica)
+    Scratch.wipe(s, replica)
     ManifestTable.mergeInto(s, T(s, dir, "orders"), replica, keys,
       dateCol = "o_orderdate")
     ManifestTable.applyChanges(s, replica,
@@ -410,7 +402,7 @@ object LakeOps extends QueryModule {
   private def buildGold(s: SparkSession, dir: String, bronze: String,
       gold: String, bookmark: String): Unit = {
     import s.implicits._
-    Seq(bronze, gold, bookmark).foreach(wipe(s, _))
+    Seq(bronze, gold, bookmark).foreach(Scratch.wipe(s, _))
     val keys = Seq("o_orderkey", "o_orderdate")
     val orders = T(s, dir, "orders")
     ManifestTable.mergeInto(s, orders, bronze, keys, dateCol = "o_orderdate")
@@ -475,7 +467,7 @@ object LakeOps extends QueryModule {
     * must inject the pruning subquery. */
   private def buildDppTables(s: SparkSession, dir: String, factPath: String,
       dimPath: String): Unit = {
-    wipe(s, factPath); wipe(s, dimPath)
+    Scratch.wipe(s, factPath); Scratch.wipe(s, dimPath)
     T(s, dir, "orders").withColumn("part_year", year(col("o_orderdate")))
       .write.partitionBy("part_year").mode("overwrite").parquet(factPath)
     T(s, dir, "orders")
@@ -524,7 +516,7 @@ object LakeOps extends QueryModule {
   /** Catalog-table names must be path-free; derive a per-variant tag the
     * same way lakeDir derives its scratch dirs. */
   private def bucketTag(sfDir: String, v: String): String =
-    v + "_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    v + "_" + Scratch.safe(sfDir)
 
   /** Orders and lineitem bucketed+sorted on the join key with EQUAL
     * bucket counts — the pre-paid shuffle. */
@@ -534,9 +526,8 @@ object LakeOps extends QueryModule {
     * left by a previous JVM. Clear both. */
   private def dropBucketTable(s: SparkSession, name: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = new Path(new Path(s.conf.get("spark.sql.warehouse.dir")), name)
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.delete(wh, true)
+    Scratch.wipe(s,
+      new Path(new Path(s.conf.get("spark.sql.warehouse.dir")), name).toString)
   }
 
   private def buildBucketedPair(s: SparkSession, dir: String, tag: String): Unit = {
@@ -595,7 +586,7 @@ object LakeOps extends QueryModule {
   private def buildWidened(s: SparkSession, dir: String, path: String): Unit = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val keys = Seq("o_orderkey", "o_orderdate")
     val orders = T(s, dir, "orders")
     ManifestTable.mergeInto(s,
@@ -653,7 +644,7 @@ object LakeOps extends QueryModule {
     * audit — the rejection must consume no version and leak no bytes. */
   private def buildWap(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val keys = Seq("o_orderkey", "o_orderdate")
     val orders = T(s, dir, "orders")
     val published = ManifestTable.writeAuditPublish(s, orders, path, keys,
@@ -711,7 +702,7 @@ object LakeOps extends QueryModule {
     * oracle-checkable modulo timestamps. */
   private def buildMetaSeq(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    wipe(s, path)
+    Scratch.wipe(s, path)
     val keys = Seq("o_orderkey", "o_orderdate")
     val orders = T(s, dir, "orders")
     ManifestTable.mergeInto(s, orders, path, keys, dateCol = "o_orderdate")

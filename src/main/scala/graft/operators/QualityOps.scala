@@ -76,18 +76,13 @@ object QualityOps extends QueryModule {
           "o_orderkey", "lineitem.l_orderkey")))
     })
 
-  /** Scratch manifest path for the metadata arm, derived from the sf
-    * dir so Verify (sf0.01) and specs (sf0.001) never share state. */
-  private def dqDir(sfDir: String, tag: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_lake/${tag}_$safe"
-  }
+  /** Scratch manifest path for the metadata arm ([[Scratch.dir]]). */
+  private def dqDir(sfDir: String, tag: String): String =
+    Scratch.dir("graft_lake", tag, sfDir)
 
   private def buildDqTable(s: org.apache.spark.sql.SparkSession,
       dir: String, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    Scratch.wipe(s, path)
     graft.etl.ManifestTable.mergeInto(s, T(s, dir, "orders"), path,
       keys = Seq("o_orderkey", "o_orderdate"), dateCol = "o_orderdate")
   }

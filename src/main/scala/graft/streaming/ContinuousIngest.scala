@@ -275,7 +275,7 @@ object ContinuousIngest {
           .filter(col("component") =!= col("doc_id"))
           .select(col("doc_id"))
     val keepers = deduped.join(losers, Seq("doc_id"), "left_anti")
-    if (spark.catalog.tableExists(s"${cfg.indexName}_banded")) {
+    if (MinhashIndex.exists(spark, cfg.indexName)) {
       val corpusPairs =
         if (cfg.exactCandidates)
           MinhashIndex.exactIncrementalPairs(spark, keepers, cfg.indexName,

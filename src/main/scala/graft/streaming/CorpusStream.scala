@@ -180,7 +180,7 @@ object CorpusStream {
       .filter(col("component") =!= col("doc_id"))
       .select(col("doc_id"))
     val keepers = batch.join(losers, Seq("doc_id"), "left_anti")
-    val haveIndex = spark.catalog.tableExists(s"${idxName}_banded")
+    val haveIndex = MinhashIndex.exists(spark, idxName)
     val survivors =
       if (haveIndex) {
         val dupOfKept = MinhashIndex

@@ -120,7 +120,7 @@ private[graft] object IndexFamily {
   private final class Minhash(cfg: ContinuousIngest.Config) extends KeyedFamily {
     private val name = cfg.indexName
     val stamp = "minhash indexed"
-    def exists(s: SparkSession): Boolean = s.catalog.tableExists(s"${name}_banded")
+    def exists(s: SparkSession): Boolean = MinhashIndex.exists(s, name)
     override def ingest(s: SparkSession, accept: DataFrame, batchId: String): Unit =
       if (!BatchLog.isCommitted(s, BatchLog.logDir(s, name), batchId))
         super.ingest(s, accept, batchId)
@@ -140,7 +140,7 @@ private[graft] object IndexFamily {
   private final class Bm25(name: String, cfg: ContinuousIngest.Config)
       extends KeyedFamily {
     val stamp = "bm25 indexed"
-    def exists(s: SparkSession): Boolean = s.catalog.tableExists(s"${name}_postings")
+    def exists(s: SparkSession): Boolean = TextIndex.exists(s, name)
     def build(s: SparkSession, rows: DataFrame, batchId: String): Unit =
       TextIndex.build(s, rows, name, buildBatchId = batchId)
     def append(s: SparkSession, rows: DataFrame, batchId: String): Unit =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{QueryDef, QueryModule, T}
+import graft.core.{QueryDef, QueryModule, Scratch, T}
 import graft.etl.{BatchLog, DataQuality, ManifestTable}
 import graft.operators.{CorpusPipeline, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -91,19 +91,10 @@ object IngestE2E extends QueryModule {
   // by source-doc shingle count n (accepted iff n < 32 at τ = 0.8)
   private val FuzzyFiller = "qa qb qc qd qe qf qg"
 
-  private def root(sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_stream/ie_$safe"
-  }
+  private def root(sfDir: String): String = Scratch.dir("graft_stream", "ie", sfDir)
 
   private def indexName(sfDir: String): String =
-    "ingest_e2e_" + sfDir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-
-  private def wipe(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+    "ingest_e2e_" + Scratch.safe(sfDir).toLowerCase
 
   private def docsOf(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents")
@@ -241,8 +232,8 @@ object IngestE2E extends QueryModule {
   /** Idempotent reset: corpus/checkpoint root, the index family's
     * catalog tables, its batch log. */
   private def wipeAll(s: SparkSession, base: String, idx: String): Unit = {
-    wipe(s, base)
-    wipe(s, BatchLog.logDir(s, idx).toString)
+    Scratch.wipe(s, base)
+    Scratch.wipe(s, BatchLog.logDir(s, idx).toString)
     Seq("banded", "shingles", "sizes", "meta", "meta__new",
         "shingles_bysh", "shingles_bysh__new")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${idx}_$t"))
@@ -250,19 +241,14 @@ object IngestE2E extends QueryModule {
 
   /** Stage `slices` as mtime-ordered files (numbered from `from`) and
     * drain the pipeline over them (AvailableNow + checkpoint: calling
-    * again with later files resumes incrementally — the s27 script). */
+    * again with later files resumes incrementally — the s27 script).
+    * Staging and source are the streaming replays' own
+    * ([[WatermarkQueries.stageSlices]], [[WatermarkQueries.source]]). */
   private def stageAndRun(s: SparkSession, base: String,
       slices: Seq[DataFrame], cfg: ContinuousIngest.Config,
       from: Int = 0): Unit = {
-    slices.zipWithIndex.foreach { case (df, i) =>
-      val j = from + i
-      WatermarkQueries.stageFile(s, df, s"$base/stage$j",
-        f"$base/in/$j%04d.parquet", 100000L * (j + 1))
-    }
-    val schema = s.read.parquet(s"$base/in").schema
-    ContinuousIngest.start(s,
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/in"),
+    WatermarkQueries.stageSlices(s, base, slices, from = from)
+    ContinuousIngest.start(s, WatermarkQueries.source(s, s"$base/in"),
       s"$base/ck", cfg).awaitTermination()
   }
 
@@ -431,7 +417,7 @@ object IngestE2E extends QueryModule {
     val cn = s"${idx}_ch"
     Seq(an, cn).foreach { n =>
       graft.etl.LshIndex.dropAll(s, n)
-      wipe(s, BatchLog.logDir(s, n).toString)
+      Scratch.wipe(s, BatchLog.logDir(s, n).toString)
     }
     // all three vector families ride the declared pipeline: the LSH and
     // IVF doc-level indexes are hash-witnessed by the probe columns
@@ -449,7 +435,7 @@ object IngestE2E extends QueryModule {
     stageAndRun(s, base, sl.drop(1), cfg, from = 1)
     if (withReindex)
       ContinuousIngest.maintain(s, cfg) // CDC: vector purge + reindex
-    vectorProbeResult(s, dir, an, s"$base/ivf")
+    vectorProbeResult(s, dir, base, an)
   }
 
   /** The s29 serving read: ANN-probe the maintained index with each
@@ -459,9 +445,11 @@ object IngestE2E extends QueryModule {
     * doc itself at cosine ≥ 0.999. Exact-vector probes make LSH recall
     * deterministic: an identical vector lands in the probed bucket of
     * every table, and the negated sibling shares none, so old_hit/
-    * new_hit are purge/reindex facts, not banding luck. */
+    * new_hit are purge/reindex facts, not banding luck. The IVF index
+    * is the run's `base/ivf`; the result is written under `base/probe`
+    * and read back, like the streaming replays' sinks. */
   private def vectorProbeResult(s: SparkSession, dir: String,
-      an: String, ivfPath: String): DataFrame = {
+      base: String, an: String): DataFrame = {
     val off = PlantedOffset
     // the oracle's gate replay, mirrored: an update instance enters the
     // corpus (and the index) iff its scrubbed+normalized text is
@@ -473,10 +461,9 @@ object IngestE2E extends QueryModule {
     // gate replay's scan + PII-scrub regex chain re-executed per
     // consumer, ~6 evaluations per probe (guide §1.2 "don't compute
     // things twice"). Both frames are O(updated docs) rows. The result
-    // below is materialized EAGERLY (one row per updated doc) so both
-    // caches can be dropped before returning — a query must not squat
-    // on executor memory after its action (the OperatorSmokeSpec
-    // no-leaked-pins invariant).
+    // below is written before returning so both caches can be dropped —
+    // a query must not squat on executor memory after its action (the
+    // OperatorSmokeSpec no-leaked-pins invariant).
     val updIds = docsOf(s, dir)
       .filter(col("doc_id") % 3 === 0 && col("doc_id") % 10 === 3)
       .withColumn("text", concat(col("text"), lit(" upd"),
@@ -518,7 +505,7 @@ object IngestE2E extends QueryModule {
     // query — an earlier all-cluster variant measured 5× growth at 10×
     // corpus, a brute scan in disguise.
     val (ivfOld, ivfNew) = hitCols(graft.operators.IvfIndex
-      .searchIndexDirAuto(s, ivfPath, probes, topK = 10, nprobe = 1),
+      .searchIndexDirAuto(s, s"$base/ivf", probes, topK = 10, nprobe = 1),
       "ivf_")
     val result = updIds
       .join(oldHits, Seq("doc_id"), "left_outer")
@@ -530,17 +517,13 @@ object IngestE2E extends QueryModule {
         coalesce(col("new_hit"), lit(0L)).as("new_hit"),
         coalesce(col("ivf_old_hit"), lit(0L)).as("ivf_old_hit"),
         coalesce(col("ivf_new_hit"), lit(0L)).as("ivf_new_hit"))
-      .orderBy(col("doc_id"))
-    // one row per gate-passing updated doc — driver-small by
-    // construction; materializing here lets the caches drop now
-    val rows = result.collect().toSeq
-    val schema = result.schema
-    updIds.unpersist(blocking = false)
-    probes.unpersist(blocking = false)
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-      .orderBy(col("doc_id"))
+    val out = s"$base/probe"
+    try result.write.mode("overwrite").parquet(out)
+    finally {
+      updIds.unpersist(blocking = false)
+      probes.unpersist(blocking = false)
+    }
+    s.read.parquet(out).orderBy(col("doc_id"))
   }
 
   /** DuckDB fragment: the PII scrub chain over `text` — the shared
@@ -918,8 +901,7 @@ object IngestE2E extends QueryModule {
     // ingest + maintenance pipeline is the untimed SETUP; the timed
     // path is the ANN serving probe of the maintained index.
     benchBuild = Some((s, dir) =>
-      vectorProbeResult(s, dir, indexName(dir) + "_vrb_ann",
-        s"${root(dir)}_vrb/ivf")),
+      vectorProbeResult(s, dir, s"${root(dir)}_vrb", indexName(dir) + "_vrb_ann")),
     benchSetup = Some((s, dir) => {
       runIngestVectorReindex(s, dir, s"${root(dir)}_vrb",
         indexName(dir) + "_vrb")
@@ -958,8 +940,7 @@ object IngestE2E extends QueryModule {
       ORDER BY doc_id"""),
     (s, dir) => ingestVectorBlind(s, dir),
     benchBuild = Some((s, dir) =>
-      vectorProbeResult(s, dir, indexName(dir) + "_vbb_ann",
-        s"${root(dir)}_vbb/ivf")),
+      vectorProbeResult(s, dir, s"${root(dir)}_vbb", indexName(dir) + "_vbb_ann")),
     benchSetup = Some((s, dir) => {
       runIngestVectorReindex(s, dir, s"${root(dir)}_vbb",
         indexName(dir) + "_vbb", withReindex = false)

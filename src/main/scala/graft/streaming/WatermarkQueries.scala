@@ -1,10 +1,10 @@
 package graft.streaming
 
-import graft.core.{QueryDef, QueryModule}
+import graft.core.{QueryDef, QueryModule, Scratch}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode, Trigger}
 
 /** Event-time WATERMARK semantics as a declared, oracle-checked query —
   * the one Structured-Streaming behavior a 100 TB ingest actually leans
@@ -43,9 +43,26 @@ import org.apache.spark.sql.streaming.Trigger
   * the batch whose offsets entry carries slice 1's watermark, or
   * nothing is ever old enough to drop.
   *
-  * Arrival order is made deterministic the way FileStreamSource actually
-  * orders files — (modification time, path) — by staging each slice as
-  * ONE parquet file with a pinned mtime and `maxFilesPerTrigger = 1`.
+  * The replay protocol, shared by every harness ([[replay]]; the two
+  * processing-time TTL harnesses share [[ttlReplay]] instead):
+  *  - wipe the harness's scratch `base`;
+  *  - stage each slice as ONE parquet file with a pinned mtime
+  *    ([[stageSlices]]): FileStreamSource orders files by
+  *    (modification time, path), and `maxFilesPerTrigger = 1`
+  *    ([[source]]) admits one file per trigger, so arrival order is
+  *    deterministic;
+  *  - run in a DERIVED session (`newSession`: shared SparkContext,
+  *    independent SQLConf — the caller's session is never mutated, per
+  *    the GraftSession rule) with state partitioning sized to the
+  *    stream: a stateful micro-batch pays one state-store commit PER
+  *    SHUFFLE PARTITION per batch, so partitions track the stream's key
+  *    cardinality, not a batch-analytics default (3 micro-batches × 32
+  *    idle state stores was ~4× the whole query). transformWithState
+  *    harnesses also get the RocksDB state store it requires;
+  *  - drain to `Trigger.AvailableNow` termination, then
+  *    [[assertProgress]] checks the scheduling facts the oracles bake in;
+  *  - read the sink back on the CALLER's session, so the result carries
+  *    none of the derived session's fixture conf into downstream plans.
   *
   * At scale nothing here is test-rig-shaped: the same watermark bounds
   * the state store (windows older than `max ts − delay` are evicted,
@@ -58,18 +75,8 @@ object WatermarkQueries extends QueryModule {
   private val SplitDate = "2024-01-25"
   private val DelayDays = 3
 
-  /** Per-(harness, sfDir) scratch root — ONE definition of the
-    * sanitize-and-prefix convention for all ten fixtures. */
-  private def streamRoot(prefix: String, sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_stream/${prefix}_$safe"
-  }
-
-  private def wipe(s: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  private def streamRoot(prefix: String, sfDir: String): String =
+    Scratch.dir("graft_stream", prefix, sfDir)
 
   /** Stage `df` as exactly one parquet file at `dest` with a pinned
     * mtime — the knob FileStreamSource's (modTime, path) ordering keys
@@ -90,27 +97,44 @@ object WatermarkQueries extends QueryModule {
     fs.delete(sp, true)
   }
 
-  /** Stage each slice as one mtime-ordered file under `base/<sub>` and
-    * return each slice's NON-EMPTINESS (from the staged parquet
-    * footers): an empty slice still stages a file and burns a trigger,
-    * but its micro-batch reports zero input rows, so
+  /** Stage each slice as one mtime-ordered file under `base/<sub>`,
+    * numbered from `from` (a resumed stream stages after its earlier
+    * files), and return each slice's NON-EMPTINESS (from the staged
+    * parquet footers): an empty slice still stages a file and burns a
+    * trigger, but its micro-batch reports zero input rows, so
     * [[assertProgress]]'s expected data-batch count must skip it
     * rather than blame Spark's scheduling for the shortfall. The count
     * is a DRIVER-SIDE footer read — a `spark.read...count()` here cost
     * a full job per slice, ~15% of each declared streaming query. */
-  private def stageSlices(s: SparkSession, base: String,
-      slices: Seq[DataFrame], sub: String = "in"): Seq[Boolean] = {
-    slices.zipWithIndex.foreach { case (df, i) =>
-      stageFile(s, df, s"$base/stage$sub$i", f"$base/$sub/$i%04d.parquet",
-        100000L * (i + 1))
+  private[graft] def stageSlices(s: SparkSession, base: String,
+      slices: Seq[DataFrame], sub: String = "in", from: Int = 0): Seq[Boolean] = {
+    val files = slices.indices.map(i => f"$base/$sub/${from + i}%04d.parquet")
+    slices.zip(files).zipWithIndex.foreach { case ((df, file), i) =>
+      stageFile(s, df, s"$base/stage$sub${from + i}", file, 100000L * (from + i + 1))
     }
     val conf = s.sparkContext.hadoopConfiguration
-    slices.indices.map { i =>
+    files.map { file =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(f"$base/$sub/$i%04d.parquet"), conf)
+        .fromPath(new Path(file), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount > 0 finally r.close()
     }
+  }
+
+  /** The parquet file stream over `dir`, admitting one file per trigger. */
+  private[graft] def source(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
+  /** The derived session a replay runs in (see the object doc). */
+  private def streamSession(s: SparkSession, rocksDb: Boolean): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    if (rocksDb)
+      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    ss
   }
 
   /** Post-run assertion of the Spark-internal scheduling facts every
@@ -122,17 +146,17 @@ object WatermarkQueries extends QueryModule {
     * watermark) now fails with a NAMED assertion at the harness instead
     * of a bare oracle hash mismatch at the driver.
     *
-    * `expectWatermark = false` for the watermark-free harness
-    * (runRunningCount, NoTimeout keyed state): its progress carries no
-    * eventTime watermark entry.
+    * `expectWatermark = false` for the watermark-free harnesses (keyed
+    * state without event time): their progress carries no eventTime
+    * watermark entry.
     *
     * `recentProgress` retains only the last
     * `spark.sql.streaming.numRecentProgressUpdates` (default 100)
     * entries, so this count is sound only while a run stays under that
     * cap — guarded below; a harness that ever stages ≥100 slices must
     * switch to a StreamingQueryListener tally instead. */
-  private def assertProgress(q: org.apache.spark.sql.streaming.StreamingQuery,
-      expectDataBatches: Int, expectWatermark: Boolean = true): Unit = {
+  private def assertProgress(q: StreamingQuery,
+      expectDataBatches: Int, expectWatermark: Boolean): Unit = {
     val progs = q.recentProgress.toSeq
     require(progs.size < 100,
       s"${progs.size} progress entries — at recentProgress's retention " +
@@ -155,103 +179,95 @@ object WatermarkQueries extends QueryModule {
     }
   }
 
-  /** Run the watermark pipeline over `slices` (arrival order) and return
-    * the batch read of everything the append sink emitted. Shared by the
-    * declared query (events-table slices) and WatermarkLateSpec's
-    * hand-built frames.
+  /** Replay `slices` (arrival order) through `query` and return the
+    * sink's contents ordered by `orderBy`. `query` builds the stream
+    * from the derived session and an opener of the staged `base/<sub>`
+    * sources.
     *
-    * The stream runs in a DERIVED session (`newSession`: shared
-    * SparkContext, independent SQLConf — the caller's session is never
-    * mutated, per the GraftSession rule) with state partitioning sized
-    * to the stream: a stateful micro-batch pays one state-store
-    * commit PER SHUFFLE PARTITION per batch, so partitions must track
-    * the stream's key cardinality, not a batch-analytics default — at
-    * 100 TB that means sizing to the cluster, here to the fixture
-    * (3 micro-batches × 32 idle state stores was pure overhead, ~4×
-    * the whole query). */
-  private[graft] def runWindowed(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String): DataFrame = {
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = ss.read.parquet(s"$base/in").schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-    val agg = stream
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
+    *  - `left`: the stream join's second source, staged as ONE file
+    *    under `inL` that rides the seed batch; `slices` then stage under
+    *    `inR`. Batch i consumes slice i (plus the left file at i = 0), so
+    *    a batch carries data iff its slice is non-empty or it is the seed
+    *    batch of a non-empty left.
+    *  - `upsertKeys`: emit in update mode and upsert each micro-batch
+    *    into the keyed parquet table `base/gold`
+    *    ([[StreamingIngest.mergeIntoParquet]]) instead of appending to
+    *    `base/out`. */
+  private def replay(s: SparkSession, base: String, slices: Seq[DataFrame],
+      orderBy: Seq[String], left: Option[DataFrame] = None,
+      rocksDb: Boolean = false, expectWatermark: Boolean = true,
+      upsertKeys: Seq[String] = Nil)(
+      query: (SparkSession, String => DataFrame) => DataFrame): DataFrame = {
+    Scratch.wipe(s, base)
+    val seeded = left.exists(l => stageSlices(s, base, Seq(l), sub = "inL").head)
+    val flags = stageSlices(s, base, slices, sub = if (left.isEmpty) "in" else "inR")
+    val ss = streamSession(s, rocksDb)
+    val w = query(ss, sub => source(ss, s"$base/$sub")).writeStream
+      .option("checkpointLocation", s"$base/ck")
+      .trigger(Trigger.AvailableNow())
+    val out = s"$base/${if (upsertKeys.isEmpty) "out" else "gold"}"
+    val q =
+      if (upsertKeys.isEmpty)
+        w.outputMode("append").format("parquet").option("path", out).start()
+      else
+        w.outputMode("update").foreachBatch { (batch: DataFrame, _: Long) =>
+          StreamingIngest.mergeIntoParquet(ss, batch, out, upsertKeys)
+        }.start()
+    q.awaitTermination()
+    assertProgress(q, flags.zipWithIndex.count { case (ne, i) =>
+      ne || (i == 0 && seeded) }, expectWatermark)
+    s.read.parquet(out).orderBy(orderBy.map(col): _*)
+  }
+
+  /** The windowed count three harnesses share: events per (1-day
+    * tumbling window, `event_type`). */
+  private def dailyCounts(rows: DataFrame): DataFrame =
+    rows.groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    // read back on the CALLER's session — the result must not carry the
-    // derived session's fixture conf into downstream plans
-    s.read.parquet(s"$base/out")
-      .orderBy(col("window_start"), col("event_type"))
-  }
 
-  /** [[runWindowed]]'s sibling for STREAMING DEDUPLICATION: the same
-    * staged arrival sequence through `withWatermark` →
-    * `dropDuplicatesWithinWatermark(key)` → append sink. Emits each
-    * first arrival exactly once; what happens to re-arrivals and to
-    * late first-arrivals is the watermark algebra the declared query's
-    * oracle replays. */
-  private[graft] def runDedup(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String, key: String): DataFrame = {
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = ss.read.parquet(s"$base/in").schema
-    val deduped = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark(key)
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    s.read.parquet(s"$base/out").orderBy(col(key))
-  }
+  /** `events` narrowed to `cols`, the columns a fixture stages. */
+  private def events(s: SparkSession, dir: String, cols: String*): DataFrame =
+    graft.operators.EventOps.events(s, dir).select(cols.map(col): _*)
 
-  /** The declared arrival sequence over the events table: slice 1 is
-    * everything before [[SplitDate]] except the `event_id % 4 == 0`
-    * holdback; slice 2 is the timeline tail (at/after the split — it
-    * carries the global max event time, so the final watermark is
-    * `max(all ts) − delay`); slice 3 is the holdback, arriving
-    * genuinely late against slice 1's watermark. */
-  def watermarkLate(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("event_type"))
+  /** The declared three-slice arrival over `ev`: slice 1 is everything
+    * before [[SplitDate]] except the `event_id % 4 == 0` holdback; slice
+    * 2 is the timeline tail (at/after the split — it carries the global
+    * max event time, so the final watermark is `max(all ts) − delay`);
+    * slice 3 is the holdback, arriving genuinely late against slice 1's
+    * watermark. */
+  private def arrival(ev: DataFrame): Seq[DataFrame] = {
     val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-    runWindowed(s, streamRoot("wm", dir), Seq(onTime, tail, holdback), s"$DelayDays days")
+    Seq(ev.filter(col("ts") < split && col("event_id") % 4 =!= 0),
+      ev.filter(col("ts") >= split),
+      ev.filter(col("ts") < split && col("event_id") % 4 === 0))
   }
 
-  /** The oracle replays the watermark algebra in plain SQL: the
-    * late-event watermark from slice 1's max, per-row late acceptance
-    * (`window_end > wm_late`), final emission
-    * (`window_end <= max(all) − delay`). A value drift in ANY of
-    * Spark's three watermark decisions — advancement, late-drop,
-    * flush — breaks the hash. */
+  /** The watermark pipeline over `slices`: the daily window count per
+    * event type, append mode, so each window emits exactly once, when
+    * the watermark finalizes it. Shared by the declared query
+    * (events-table slices) and WatermarkLateSpec's hand-built frames. */
+  private[graft] def runWindowed(s: SparkSession, base: String,
+      slices: Seq[DataFrame], delay: String): DataFrame =
+    replay(s, base, slices, Seq("window_start", "event_type"))((_, in) =>
+      dailyCounts(in("in").withWatermark("ts", delay)))
+
+  /** [[runWindowed]]'s sibling for STREAMING DEDUPLICATION:
+    * `withWatermark` → `dropDuplicatesWithinWatermark(key)` → append
+    * sink. Emits each first arrival exactly once; what happens to
+    * re-arrivals and to late first-arrivals is the watermark algebra the
+    * declared query's oracle replays. */
+  private[graft] def runDedup(s: SparkSession, base: String,
+      slices: Seq[DataFrame], delay: String, key: String): DataFrame =
+    replay(s, base, slices, Seq(key))((_, in) =>
+      in("in").withWatermark("ts", delay).dropDuplicatesWithinWatermark(key))
+
+  /** The declared arrival sequence over the events table ([[arrival]]). */
+  def watermarkLate(s: SparkSession, dir: String): DataFrame =
+    runWindowed(s, streamRoot("wm", dir),
+      arrival(events(s, dir, "event_id", "ts", "event_type")), s"$DelayDays days")
+
   /** STREAM-STREAM interval join harness: two file sources (left staged
     * as one file, right as an mtime-ordered file PER SLICE), both sides
     * watermarked, joined on `joinExpr`. Batch 0 consumes the left file
@@ -262,36 +278,13 @@ object WatermarkQueries extends QueryModule {
   private[graft] def runStreamJoin(s: SparkSession, base: String,
       left: DataFrame, rightSlices: Seq[DataFrame], delay: String,
       joinExpr: String, project: Seq[String],
-      joinType: String = "inner"): DataFrame = {
-    wipe(s, base)
-    val leftNonEmpty = stageSlices(s, base, Seq(left), sub = "inL").head
-    val rightFlags = stageSlices(s, base, rightSlices, sub = "inR")
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    def src(dir: String) = ss.readStream
-      .schema(ss.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    val joined = src(s"$base/inL").alias("v").withWatermark("ts", delay)
-      .join(src(s"$base/inR").alias("c").withWatermark("ts", delay),
-        expr(joinExpr), joinType)
-      .selectExpr(project: _*)
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // batch i consumes right slice i (plus the left file at i = 0), so
-    // a batch carries data iff that right slice is non-empty or it is
-    // the seed batch of a non-empty left
-    assertProgress(q, rightFlags.zipWithIndex.count { case (ne, i) =>
-      ne || (i == 0 && leftNonEmpty) })
-    s.read.parquet(s"$base/out")
-      .orderBy(project.map(p => col(p.split(" AS ").last.trim)): _*)
-  }
+      joinType: String = "inner"): DataFrame =
+    replay(s, base, rightSlices, project.map(_.split(" AS ").last.trim),
+        left = Some(left))((_, in) =>
+      in("inL").alias("v").withWatermark("ts", delay)
+        .join(in("inR").alias("c").withWatermark("ts", delay),
+          expr(joinExpr), joinType)
+        .selectExpr(project: _*))
 
   /** [[runWindowed]]'s sibling for SESSION WINDOWS: `session_window`
     * with an inactivity `gap`, grouped per user, append mode. A session
@@ -299,32 +292,13 @@ object WatermarkQueries extends QueryModule {
     * (last event + gap); late rows are judged by their own would-be
     * session end (`ts + gap` vs the late-event watermark). */
   private[graft] def runSessions(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String, gap: String): DataFrame = {
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = ss.read.parquet(s"$base/in").schema
-    val agg = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .withWatermark("ts", delay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("user_id"), col("n_events"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("user_id"), col("session_start"))
-  }
+      slices: Seq[DataFrame], delay: String, gap: String): DataFrame =
+    replay(s, base, slices, Seq("user_id", "session_start"))((_, in) =>
+      in("in").withWatermark("ts", delay)
+        .groupBy(session_window(col("ts"), gap), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("session_window.start").as("session_start"),
+          col("user_id"), col("n_events")))
 
   /** [[runSessions]]'s ARBITRARY-STATE sibling: per-user sessionization
     * via `flatMapGroupsWithState` + **EventTimeTimeout** — the
@@ -360,91 +334,74 @@ object WatermarkQueries extends QueryModule {
     * micro-batch — the same per-key working set every keyed-state
     * operator holds. */
   private[graft] def runTimeoutSessions(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String, gapMinutes: Int): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    import ss.implicits._
-    val gapMs = gapMinutes * 60000L
-    val schema = ss.read.parquet(s"$base/in").schema
-    val sessions = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .withWatermark("ts", delay)
-      .selectExpr("CAST(user_id AS LONG) AS user_id", "ts")
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, java.sql.Timestamp, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-            state: GroupState[(Long, Long, Long)]) => // (startUs, lastUs, n)
-          // state carries MICROSECOND epochs: `Timestamp.getTime` is
-          // ms-truncating, and the emitted session_start must round-trip
-          // the source's µs precision exactly (the oracle hashes it).
-          // Only the TIMER drops to ms — the GroupState API's unit.
-          def us(t: java.sql.Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          def fromUs(u: Long): java.sql.Timestamp = {
-            val t = new java.sql.Timestamp(u / 1000L)
-            t.setNanos(((u % 1000000L) * 1000L).toInt)
-            t
-          }
-          val gapUs = gapMs * 1000L
-          if (state.hasTimedOut) {
-            val (start, _, n) = state.get
-            state.remove()
-            Iterator.single((user, fromUs(start), n))
-          } else {
-            val ts = rows.map(r => us(r._2)).toArray.sorted
-            val closed = scala.collection.mutable.ListBuffer
-              .empty[(Long, java.sql.Timestamp, Long)]
-            var cur = state.getOption
-            ts.foreach { t =>
-              cur = cur match {
-                case Some((start, last, n)) if t - last < gapUs =>
-                  Some((start, math.max(last, t), n + 1))
-                case Some((start, _, n)) =>
+      slices: Seq[DataFrame], delay: String, gapMinutes: Int): DataFrame =
+    replay(s, base, slices, Seq("user_id", "session_start")) { (ss, in) =>
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+      import ss.implicits._
+      val gapMs = gapMinutes * 60000L
+      in("in")
+        .withWatermark("ts", delay)
+        .selectExpr("CAST(user_id AS LONG) AS user_id", "ts")
+        .as[(Long, java.sql.Timestamp)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[(Long, Long, Long), (Long, java.sql.Timestamp, Long)](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],
+              state: GroupState[(Long, Long, Long)]) => // (startUs, lastUs, n)
+            // state carries MICROSECOND epochs: `Timestamp.getTime` is
+            // ms-truncating, and the emitted session_start must round-trip
+            // the source's µs precision exactly (the oracle hashes it).
+            // Only the TIMER drops to ms — the GroupState API's unit.
+            def us(t: java.sql.Timestamp): Long =
+              t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+            def fromUs(u: Long): java.sql.Timestamp = {
+              val t = new java.sql.Timestamp(u / 1000L)
+              t.setNanos(((u % 1000000L) * 1000L).toInt)
+              t
+            }
+            val gapUs = gapMs * 1000L
+            if (state.hasTimedOut) {
+              val (start, _, n) = state.get
+              state.remove()
+              Iterator.single((user, fromUs(start), n))
+            } else {
+              val ts = rows.map(r => us(r._2)).toArray.sorted
+              val closed = scala.collection.mutable.ListBuffer
+                .empty[(Long, java.sql.Timestamp, Long)]
+              var cur = state.getOption
+              ts.foreach { t =>
+                cur = cur match {
+                  case Some((start, last, n)) if t - last < gapUs =>
+                    Some((start, math.max(last, t), n + 1))
+                  case Some((start, _, n)) =>
+                    closed += ((user, fromUs(start), n))
+                    Some((t, t, 1L))
+                  case None => Some((t, t, 1L))
+                }
+              }
+              cur.foreach { case (start, last, n) =>
+                val wm = state.getCurrentWatermarkMs()
+                // the timer unit is MILLISECONDS (the GroupState API's
+                // contract), so `last / 1000L` floors sub-ms event time —
+                // the ev_stream_timeout oracle ms-truncates last_ts before
+                // adding the gap so both sides evaluate the same boundary
+                val timerMs = last / 1000L + gapMs
+                if (timerMs < wm) {
+                  // no valid timer exists below the watermark — the session
+                  // is already final; emit it now (same outcome a timer
+                  // would have produced) and drop the state
                   closed += ((user, fromUs(start), n))
-                  Some((t, t, 1L))
-                case None => Some((t, t, 1L))
+                  state.remove()
+                } else {
+                  state.update((start, last, n))
+                  state.setTimeoutTimestamp(timerMs)
+                }
               }
+              closed.iterator
             }
-            cur.foreach { case (start, last, n) =>
-              val wm = state.getCurrentWatermarkMs()
-              // the timer unit is MILLISECONDS (the GroupState API's
-              // contract), so `last / 1000L` floors sub-ms event time —
-              // the ev_stream_timeout oracle ms-truncates last_ts before
-              // adding the gap so both sides evaluate the same boundary
-              val timerMs = last / 1000L + gapMs
-              if (timerMs < wm) {
-                // no valid timer exists below the watermark — the session
-                // is already final; emit it now (same outcome a timer
-                // would have produced) and drop the state
-                closed += ((user, fromUs(start), n))
-                state.remove()
-              } else {
-                state.update((start, last, n))
-                state.setTimeoutTimestamp(timerMs)
-              }
-            }
-            closed.iterator
-          }
-      }
-      .toDF("user_id", "session_start", "n_events")
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("user_id"), col("session_start"))
-  }
+        }
+        .toDF("user_id", "session_start", "n_events")
+    }
 
   /** Streaming dedup arrival sequence: slice 2 carries the timeline
     * tail PLUS re-arrivals of `id % 16 == 1` on-time rows (their keys'
@@ -453,17 +410,16 @@ object WatermarkQueries extends QueryModule {
     * either still live → suppressed, or evicted → the row is by then
     * below the late-event watermark and filtered — both paths emit
     * nothing, which is what makes the oracle a plain UNION). */
-  def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val slice2 = ev.filter(col("ts") >= split)
-      .unionByName(onTime.filter(col("event_id") % 16 === 1))
-    val slice3 = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-      .unionByName(onTime.filter(col("event_id") % 16 === 5))
-    runDedup(s, streamRoot("sd", dir), Seq(onTime, slice2, slice3),
+  def streamDedup(s: SparkSession, dir: String): DataFrame =
+    runDedup(s, streamRoot("sd", dir), rearrivals(s, dir),
       s"$DelayDays days", "event_id")
+
+  private def rearrivals(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val Seq(onTime, tail, holdback) =
+      arrival(events(s, dir, "event_id", "ts", "event_type"))
+    Seq(onTime,
+      tail.unionByName(onTime.filter(col("event_id") % 16 === 1)),
+      holdback.unionByName(onTime.filter(col("event_id") % 16 === 5)))
   }
 
   /** Streaming dedup declared: every first arrival exactly once, every
@@ -511,18 +467,25 @@ object WatermarkQueries extends QueryModule {
     * state the eviction rule retains) — join-state GC at 100 TB costs
     * ZERO matches by construction, and the oracle's only non-join term
     * is the late-click filter. */
-  def streamJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+  def streamJoin(s: SparkSession, dir: String): DataFrame =
+    viewsJoinClicks(s, dir, "sj", "inner")
+
+  /** Views joined to the three click waves (`event_id % 8` not in
+    * {0, 4}, then `== 4`, then `== 0`). */
+  private def viewsJoinClicks(s: SparkSession, dir: String, prefix: String,
+      joinType: String): DataFrame = {
+    val ev = events(s, dir, "event_id", "ts", "user_id", "event_type")
     val views = ev.filter(col("event_type") === "view").drop("event_type")
     val clicks = ev.filter(col("event_type") === "click").drop("event_type")
     val r0 = clicks.filter(col("event_id") % 8 =!= 0 && col("event_id") % 8 =!= 4)
     val r1 = clicks.filter(col("event_id") % 8 === 4)
     val r2 = clicks.filter(col("event_id") % 8 === 0)
-    runStreamJoin(s, streamRoot("sj", dir), views, Seq(r0, r1, r2), s"$DelayDays days",
+    runStreamJoin(s, streamRoot(prefix, dir), views, Seq(r0, r1, r2),
+      s"$DelayDays days",
       "v.user_id = c.user_id AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR",
       Seq("v.event_id AS view_id", "c.event_id AS click_id",
-        "v.user_id AS user_id"))
+        "v.user_id AS user_id"),
+      joinType)
   }
 
   private val evStreamJoin = QueryDef(
@@ -578,74 +541,46 @@ object WatermarkQueries extends QueryModule {
     * watermark-bounded, and the gold table is correct at every commit
     * (eventually-correct dashboards read it mid-stream). */
   private[graft] def runUpdateGold(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String): DataFrame = {
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = ss.read.parquet(s"$base/in").schema
-    val agg = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"))
-    val gold = s"$base/gold"
-    val q = agg.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        StreamingIngest.mergeIntoParquet(ss, batch, gold,
-          Seq("window_start", "event_type"))
-      }
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    s.read.parquet(gold)
-      .orderBy(col("window_start"), col("event_type"))
-  }
+      slices: Seq[DataFrame], delay: String): DataFrame =
+    replay(s, base, slices, Seq("window_start", "event_type"),
+        upsertKeys = Seq("window_start", "event_type"))((_, in) =>
+      dailyCounts(in("in").withWatermark("ts", delay)))
 
   /** [[runRunningCount]]'s sibling on the CURRENT arbitrary-state API
     * (`transformWithState`, Spark 4's StatefulProcessor — fMGWS's
     * successor): per event type, EXACT cumulative distinct-user
     * tracking across micro-batches via [[DistinctUsersProcessor]]
-    * (seedless overload), on the RocksDB state store TWS requires
-    * (set on the derived session; the default HDFS-backed provider
-    * refuses TWS). */
+    * (seedless overload). */
   private[graft] def runDistinctUsers(s: SparkSession, base: String,
-      slices: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      slices: Seq[DataFrame]): DataFrame =
+    replay(s, base, slices, Seq("event_type", "n_distinct_users"),
+      rocksDb = true, expectWatermark = false)((ss, in) =>
+      distinctUsers(ss, in("in"), seed = None))
+
+  /** Per event type, the cumulative distinct users through each batch
+    * ([[DistinctUsersProcessor]]), optionally warm-started from `seed`
+    * (one initial-state row per key, the API's contract: the batch
+    * table collapses to (type, user-set) via collect_set). */
+  private def distinctUsers(ss: SparkSession, events: DataFrame,
+      seed: Option[DataFrame]): DataFrame = {
     import ss.implicits._
-    val schema = ss.read.parquet(s"$base/in").schema
-    val counted = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
+    val byType = events
       .selectExpr("event_type", "CAST(user_id AS LONG) AS user_id")
       .as[(String, Long)]
       .groupByKey(_._1)
-      .transformWithState(new DistinctUsersProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("event_type", "n_distinct_users")
-    val q = counted.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices, expectWatermark = false)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("event_type"), col("n_distinct_users"))
+    val counted = seed match {
+      case None =>
+        byType.transformWithState(new DistinctUsersProcessor,
+          TimeMode.None(), OutputMode.Append())
+      case Some(sd) =>
+        byType.transformWithState(new DistinctUsersProcessor,
+          TimeMode.None(), OutputMode.Append(), sd
+            .groupBy(col("event_type"))
+            .agg(collect_set(col("user_id").cast("long")).as("users"))
+            .as[(String, Array[Long])]
+            .groupByKey(_._1))
+    }
+    counted.toDF("event_type", "n_distinct_users")
   }
 
   /** ONE processor serves both transformWithState queries (a
@@ -699,44 +634,10 @@ object WatermarkQueries extends QueryModule {
   }
 
   private[graft] def runSeededDistinct(s: SparkSession, base: String,
-      seed: DataFrame, slices: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import ss.implicits._
-    // one initial-state row per key, the API's contract: the batch
-    // table collapses to (type, user-set) via collect_set
-    val init = seed
-      .groupBy(col("event_type"))
-      .agg(collect_set(col("user_id").cast("long")).as("users"))
-      .as[(String, Array[Long])]
-      .groupByKey(_._1)
-    val schema = ss.read.parquet(s"$base/in").schema
-    val counted = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .selectExpr("event_type", "CAST(user_id AS LONG) AS user_id")
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new DistinctUsersProcessor,
-        TimeMode.None(), OutputMode.Append(), init)
-      .toDF("event_type", "n_distinct_users")
-    val q = counted.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices, expectWatermark = false)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("event_type"), col("n_distinct_users"))
-  }
+      seed: DataFrame, slices: Seq[DataFrame]): DataFrame =
+    replay(s, base, slices, Seq("event_type", "n_distinct_users"),
+      rocksDb = true, expectWatermark = false)((ss, in) =>
+      distinctUsers(ss, in("in"), Some(seed)))
 
   /** Initial-state transformWithState declared: the pre-split on-time
     * rows play the EXISTING BATCH TABLE (seeded, never emitted); the
@@ -746,12 +647,8 @@ object WatermarkQueries extends QueryModule {
     * seed undercounts every row, and a seed that spuriously EMITS
     * (bootstrap is not a batch) adds rows: all three break the hash. */
   def streamSeededDistinct(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val seed = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
+    val Seq(seed, tail, holdback) =
+      arrival(events(s, dir, "event_id", "ts", "user_id", "event_type"))
     runSeededDistinct(s, streamRoot("bs", dir), seed, Seq(tail, holdback))
   }
 
@@ -784,15 +681,9 @@ object WatermarkQueries extends QueryModule {
     * entry (undercount), double-counted re-arrival (overcount), or
     * dropped/duplicated emission changes the multiset and breaks the
     * hash. */
-  def streamDistinctUsers(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-    runDistinctUsers(s, streamRoot("dn", dir), Seq(onTime, tail, holdback))
-  }
+  def streamDistinctUsers(s: SparkSession, dir: String): DataFrame =
+    runDistinctUsers(s, streamRoot("dn", dir),
+      arrival(events(s, dir, "event_id", "ts", "user_id", "event_type")))
 
   private val evStreamDistinct = QueryDef(
     "ev_stream_distinct",
@@ -823,16 +714,9 @@ object WatermarkQueries extends QueryModule {
     * withholds them), and any upsert defect — a window inserted twice,
     * a stale value surviving an update, a late-accepted row re-opening
     * evicted state — shifts a count or a key and breaks the hash. */
-  def streamUpdateGold(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-    runUpdateGold(s, streamRoot("ug", dir), Seq(onTime, tail, holdback),
-      s"$DelayDays days")
-  }
+  def streamUpdateGold(s: SparkSession, dir: String): DataFrame =
+    runUpdateGold(s, streamRoot("ug", dir),
+      arrival(events(s, dir, "event_id", "ts", "event_type")), s"$DelayDays days")
 
   private val evStreamGold = QueryDef(
     "ev_stream_gold",
@@ -876,21 +760,8 @@ object WatermarkQueries extends QueryModule {
     * early and a late-but-acceptable click double-reports its view,
     * emit too late (or never) and unmatched views silently vanish —
     * either way the UNION's row set shifts and the hash breaks. */
-  def streamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val views = ev.filter(col("event_type") === "view").drop("event_type")
-    val clicks = ev.filter(col("event_type") === "click").drop("event_type")
-    val r0 = clicks.filter(col("event_id") % 8 =!= 0 && col("event_id") % 8 =!= 4)
-    val r1 = clicks.filter(col("event_id") % 8 === 4)
-    val r2 = clicks.filter(col("event_id") % 8 === 0)
-    runStreamJoin(s, streamRoot("oj", dir), views, Seq(r0, r1, r2),
-      s"$DelayDays days",
-      "v.user_id = c.user_id AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR",
-      Seq("v.event_id AS view_id", "c.event_id AS click_id",
-        "v.user_id AS user_id"),
-      joinType = "left_outer")
-  }
+  def streamOuterJoin(s: SparkSession, dir: String): DataFrame =
+    viewsJoinClicks(s, dir, "oj", "left_outer")
 
   private val evStreamOuterJoin = QueryDef(
     "ev_stream_outer_join",
@@ -948,16 +819,19 @@ object WatermarkQueries extends QueryModule {
     * sessions emit unconditionally; late rows judged by their OWN ts —
     * no windows exist; the final open session emits iff its timer,
     * `last + gap`, lands strictly below the terminal watermark). */
-  def streamTimeoutSessions(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("ts"), col("user_id"))
+  def streamTimeoutSessions(s: SparkSession, dir: String): DataFrame =
+    runTimeoutSessions(s, streamRoot("to", dir), heldUsers(s, dir),
+      s"$DelayDays days", gapMinutes = 30)
+
+  /** The sessionization arrival: users not held back before and
+    * at/after the split, then the held users (`user_id % 5 == 0`) whole. */
+  private def heldUsers(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val ev = events(s, dir, "ts", "user_id")
     val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
     val held = col("user_id") % 5 === 0
-    val f1 = ev.filter(!held && col("ts") < split)
-    val f2 = ev.filter(!held && col("ts") >= split)
-    val f3 = ev.filter(held)
-    runTimeoutSessions(s, streamRoot("to", dir), Seq(f1, f2, f3),
-      s"$DelayDays days", gapMinutes = 30)
+    Seq(ev.filter(!held && col("ts") < split),
+      ev.filter(!held && col("ts") >= split),
+      ev.filter(held))
   }
 
   private val evStreamTimeout = QueryDef(
@@ -1018,39 +892,23 @@ object WatermarkQueries extends QueryModule {
     * emitted prefix sums are correct only if every batch read back
     * exactly what the previous batch committed. */
   private[graft] def runRunningCount(s: SparkSession, base: String,
-      slices: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    import ss.implicits._
-    val schema = ss.read.parquet(s"$base/in").schema
-    val counted = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .selectExpr("CAST(user_id AS LONG) AS user_id")
-      .as[Long]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[Long], state: GroupState[Long]) =>
-          val cum = state.getOption.getOrElse(0L) + rows.size
-          state.update(cum)
-          Iterator((user, cum))
-      }
-      .toDF("user_id", "cum_events")
-    val q = counted.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices, expectWatermark = false)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("user_id"), col("cum_events"))
-  }
+      slices: Seq[DataFrame]): DataFrame =
+    replay(s, base, slices, Seq("user_id", "cum_events"),
+        expectWatermark = false) { (ss, in) =>
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+      import ss.implicits._
+      in("in")
+        .selectExpr("CAST(user_id AS LONG) AS user_id")
+        .as[Long]
+        .groupByKey(identity)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (user: Long, rows: Iterator[Long], state: GroupState[Long]) =>
+            val cum = state.getOption.getOrElse(0L) + rows.size
+            state.update(cum)
+            Iterator((user, cum))
+        }
+        .toDF("user_id", "cum_events")
+    }
 
   /** STREAMING SESSIONIZATION declared: `session_window` (30-minute
     * inactivity gap) per user across a three-slice arrival where the
@@ -1067,17 +925,9 @@ object WatermarkQueries extends QueryModule {
     * cleared `max(all ts) − delay`). Sessions merging ACROSS arrival
     * slices (a tail row extending a pre-split session, late rows
     * bridging into islands) are exercised by construction. */
-  def streamSessions(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("ts"), col("user_id"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val held = col("user_id") % 5 === 0
-    val f1 = ev.filter(!held && col("ts") < split)
-    val f2 = ev.filter(!held && col("ts") >= split)
-    val f3 = ev.filter(held)
-    runSessions(s, streamRoot("ss", dir), Seq(f1, f2, f3),
+  def streamSessions(s: SparkSession, dir: String): DataFrame =
+    runSessions(s, streamRoot("ss", dir), heldUsers(s, dir),
       s"$DelayDays days", "30 minutes")
-  }
 
   /** flatMapGroupsWithState declared: the per-user running count over
     * the standard three-slice arrival. The oracle is three per-slice
@@ -1085,15 +935,9 @@ object WatermarkQueries extends QueryModule {
     * in, carrying the cumulative count THROUGH that slice. Any state
     * loss, double-count, or replayed batch between micro-batches would
     * shift a prefix sum and break the hash. */
-  def streamRunningCount(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-    runRunningCount(s, streamRoot("st", dir), Seq(onTime, tail, holdback))
-  }
+  def streamRunningCount(s: SparkSession, dir: String): DataFrame =
+    runRunningCount(s, streamRoot("st", dir),
+      arrival(events(s, dir, "event_id", "ts", "user_id")))
 
   private val evStreamState = QueryDef(
     "ev_stream_running_count",
@@ -1160,6 +1004,12 @@ object WatermarkQueries extends QueryModule {
       ORDER BY user_id, session_start"""),
     (s, dir) => streamSessions(s, dir))
 
+  /** The oracle replays the watermark algebra in plain SQL: the
+    * late-event watermark from slice 1's max, per-row late acceptance
+    * (`window_end > wm_late`), final emission
+    * (`window_end <= max(all) − delay`). A value drift in ANY of
+    * Spark's three watermark decisions — advancement, late-drop,
+    * flush — breaks the hash. */
   private val evWatermark = QueryDef(
     "ev_watermark_late",
     Some(s"""
@@ -1253,31 +1103,29 @@ object WatermarkQueries extends QueryModule {
     }
   }
 
-  /** Unlike every other harness here, this one cannot ride
-    * `Trigger.AvailableNow` + `awaitTermination`: a
-    * `TimeMode.ProcessingTime` transformWithState keeps constructing
-    * housekeeping micro-batches forever (each advances the processing-
-    * time clock for TTL eviction — measured: thousands of batches, the
-    * query never self-terminates, and `processAllAvailable` never
-    * latches because "no new data" is never reached). The run is
-    * bounded from the OUTPUT side instead: a
-    * [[org.apache.spark.sql.streaming.StreamingQueryListener]] counts
-    * data-carrying batches (progress events fire after the batch
-    * commits, so the sink rows are durable), and the harness stops the
-    * query once all staged files have been processed — or fails loudly
-    * on a bounded deadline if Spark's file-admission scheduling
-    * drifted. Housekeeping batches emit nothing and touch no counted
-    * state, so the output is the same deterministic function of the
-    * data batches. */
-  private[graft] def runTtlDistinct(s: SparkSession, base: String,
-      slices: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, TimeMode}
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  /** The two TTL harnesses cannot ride `Trigger.AvailableNow` +
+    * `awaitTermination`: a `TimeMode.ProcessingTime` transformWithState
+    * keeps constructing housekeeping micro-batches forever (each
+    * advances the processing-time clock for TTL eviction — measured:
+    * thousands of batches, the query never self-terminates, and
+    * `processAllAvailable` never latches because "no new data" is never
+    * reached). The run is bounded from the OUTPUT side instead: a
+    * [[org.apache.spark.sql.streaming.StreamingQueryListener]] stamps
+    * each data-carrying batch of this query (progress events fire after
+    * the batch commits, so the sink rows are durable, and the stamp is
+    * the trigger timestamp — the clock TTL expiry runs on), `drive`
+    * waits on the stamps ([[TtlDrain.await]]), and the query is stopped
+    * once it returns, also on failure. Housekeeping batches emit nothing
+    * and touch no counted state, so the output is the same
+    * deterministic function of the data batches.
+    *
+    * Runs [[TtlDistinctUsersProcessor]] under `ttlMs` over the files
+    * under `base/in`, triggering every `interval`, and returns the data
+    * batches' trigger stamps in order. */
+  private def ttlReplay(s: SparkSession, base: String, ttlMs: Long,
+      interval: String)(drive: TtlDrain => Unit): Seq[Long] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val ss = streamSession(s, rocksDb = true)
     import ss.implicits._
     val qName = s"graft_ttl_${java.util.UUID.randomUUID().toString.take(8)}"
     val stamps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -1293,61 +1141,79 @@ object WatermarkQueries extends QueryModule {
     }
     ss.streams.addListener(listener)
     try {
-      val schema = ss.read.parquet(s"$base/in").schema
-      val counted = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/in")
+      val q = source(ss, s"$base/in")
         .selectExpr("event_type", "CAST(user_id AS LONG) AS user_id")
         .as[(String, Long)]
         .groupByKey(_._1)
-        .transformWithState(new TtlDistinctUsersProcessor(TtlMs),
+        .transformWithState(new TtlDistinctUsersProcessor(ttlMs),
           TimeMode.ProcessingTime(), OutputMode.Append())
         .toDF("event_type", "n_batch_users", "n_cumulative")
-      val q = counted.writeStream
+        .writeStream
         .queryName(qName)
         .outputMode("append")
         .format("parquet")
         .option("path", s"$base/out")
         .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.ProcessingTime("1 second"))
+        .trigger(Trigger.ProcessingTime(interval))
         .start()
-      // the drain bound must scale with input (this harness rides the
-      // scale curve at 10-30x data) and is env-overridable for unusual
-      // hosts; hitting it is reported as a TIMEOUT, not misattributed
-      // to admission scheduling
-      val drainSecs = sys.env.getOrElse("SPARK_GRAFT_TTL_DRAIN_SECS", "600").toLong
-      var timedOut = false
-      try {
-        // wait until every staged file has ridden a committed data
-        // batch (listener fires post-commit); bounded, never forever
-        val deadline = System.nanoTime() + drainSecs * 1000 * 1000 * 1000
-        while (stamps.size < dataSlices && q.isActive &&
-            System.nanoTime() < deadline)
-          Thread.sleep(100)
-        timedOut = stamps.size < dataSlices && System.nanoTime() >= deadline
-      } finally { q.stop(); q.awaitTermination() }
-      require(!timedOut,
-        s"TTL harness drain exceeded $drainSecs s with ${stamps.size} of " +
+      val drain = new TtlDrain(q, stamps)
+      try drive(drain) finally { q.stop(); q.awaitTermination() }
+      drain.times
+    } finally ss.streams.removeListener(listener)
+  }
+
+  /** A running [[ttlReplay]] query and the stamps its data batches left. */
+  private final class TtlDrain(q: StreamingQuery,
+      stamps: java.util.Queue[Long]) {
+    /** The drain bound must scale with input (these harnesses ride the
+      * scale curve at 10-30x data) and is env-overridable for unusual
+      * hosts; hitting it is reported as a TIMEOUT, not misattributed to
+      * admission scheduling. */
+    val secs: Long = sys.env.getOrElse("SPARK_GRAFT_TTL_DRAIN_SECS", "600").toLong
+
+    def committed: Int = stamps.size
+
+    /** The committed data batches' trigger stamps, in order. */
+    def times: Seq[Long] = {
+      import scala.jdk.CollectionConverters._
+      stamps.asScala.toSeq.sorted
+    }
+
+    /** Wait until `n` data batches have committed; fail with `why` if
+      * the query stops or the drain bound passes first. */
+    def await(n: Int)(why: => String): Unit = {
+      val deadline = System.nanoTime() + secs * 1000L * 1000 * 1000
+      while (stamps.size < n && q.isActive && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      require(stamps.size >= n, why)
+    }
+  }
+
+  /** The all-expire corner: `TtlMs` below every inter-batch gap, so
+    * every seen-entry is expired by the next batch. */
+  private[graft] def runTtlDistinct(s: SparkSession, base: String,
+      slices: Seq[DataFrame]): DataFrame = {
+    Scratch.wipe(s, base)
+    val dataSlices = stageSlices(s, base, slices).count(identity)
+    val ts = ttlReplay(s, base, TtlMs, "1 second") { d =>
+      // every staged file has ridden a committed data batch
+      d.await(dataSlices)(
+        s"TTL harness drain exceeded ${d.secs} s with ${d.committed} of " +
           s"$dataSlices data batches committed — raise " +
           "SPARK_GRAFT_TTL_DRAIN_SECS for this data size")
-      require(stamps.size == dataSlices,
-        s"oracle assumes $dataSlices one-file data micro-batches " +
-          s"(maxFilesPerTrigger=1 admission), observed ${stamps.size} — " +
-          "Spark's file-admission scheduling drifted; re-derive the oracle")
-      // the one scheduling fact the oracle bakes in beyond the batch
-      // count: every inter-batch gap exceeds the TTL (batch-clocked
-      // expiry), so every prior batch's seen-entries are expired at
-      // probe time. A violation fails LOUDLY here instead of
-      // hash-mismatching at the driver.
-      val ts = {
-        val it = stamps.iterator(); val b = Seq.newBuilder[Long]
-        while (it.hasNext) b += it.next()
-        b.result().sorted
-      }
-      require(ts.zip(ts.drop(1)).forall { case (a, b) => b - a > TtlMs },
-        s"oracle assumes every inter-batch gap exceeds the $TtlMs ms state " +
-          s"TTL; observed batch timestamps $ts")
-    } finally ss.streams.removeListener(listener)
+    }
+    require(ts.size == dataSlices,
+      s"oracle assumes $dataSlices one-file data micro-batches " +
+        s"(maxFilesPerTrigger=1 admission), observed ${ts.size} — " +
+        "Spark's file-admission scheduling drifted; re-derive the oracle")
+    // the one scheduling fact the oracle bakes in beyond the batch
+    // count: every inter-batch gap exceeds the TTL (batch-clocked
+    // expiry), so every prior batch's seen-entries are expired at
+    // probe time. A violation fails LOUDLY here instead of
+    // hash-mismatching at the driver.
+    require(ts.zip(ts.drop(1)).forall { case (a, b) => b - a > TtlMs },
+      s"oracle assumes every inter-batch gap exceeds the $TtlMs ms state " +
+        s"TTL; observed batch timestamps $ts")
     s.read.parquet(s"$base/out")
       .orderBy(col("event_type"), col("n_cumulative"))
   }
@@ -1359,15 +1225,9 @@ object WatermarkQueries extends QueryModule {
     * counter). A seen-entry surviving past its TTL shrinks a batch
     * count; a counter lost to spurious expiry breaks the running sum;
     * either breaks the hash. */
-  def streamTtlDistinct(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val tail = ev.filter(col("ts") >= split)
-    val holdback = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-    runTtlDistinct(s, streamRoot("tt", dir), Seq(onTime, tail, holdback))
-  }
+  def streamTtlDistinct(s: SparkSession, dir: String): DataFrame =
+    runTtlDistinct(s, streamRoot("tt", dir),
+      arrival(events(s, dir, "event_id", "ts", "user_id", "event_type")))
 
   private val evStreamTtl = QueryDef(
     "ev_stream_ttl",
@@ -1463,8 +1323,7 @@ object WatermarkQueries extends QueryModule {
     * and the caller rebuilds from scratch. */
   private def ttlRetentionOnce(s: SparkSession, base: String,
       slices: Seq[DataFrame], ttlMs: Long): Option[String] = {
-    import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, TimeMode}
-    wipe(s, base)
+    Scratch.wipe(s, base)
     // The straddle compares TRIGGER timestamps because that is the
     // clock TTL state actually runs on: a `TimeMode.ProcessingTime`
     // transformWithState pins `batchTimestampMs` — the trigger's
@@ -1482,7 +1341,6 @@ object WatermarkQueries extends QueryModule {
     // TtlClockSpec pins that semantic so an upstream change fails the
     // build, not the hash.)
     val skewMs = 100L
-    val drainSecs = sys.env.getOrElse("SPARK_GRAFT_TTL_DRAIN_SECS", "600").toLong
     // A WARMUP batch rides the stream's cold-start cost (state-store
     // init, source listing, sink setup, codegen — measured ~5 s on the
     // first data batch vs ~1 s steady-state), so gap₁ is measured
@@ -1494,103 +1352,52 @@ object WatermarkQueries extends QueryModule {
       .withColumn("event_type", lit(TtlWarmupType))
       .withColumn("user_id", col("user_id") * 0 - 1)
     stageFile(s, warm, s"$base/stagew", f"$base/in/0000.parquet", 50000L)
-    // slices 0 AND 1 staged upfront (mtime-ordered; maxFilesPerTrigger=1
-    // still admits exactly one per trigger), so gap₁ is just warm batch
-    // duration + trigger cadence — NOT the staging write, which at
-    // larger data sizes dominated the gap and forced a wide band. Only
-    // batch 3's file is held back (the large-gap control). Measured at
-    // sf0.1: gap₁ ~0.7–1.5 s staged-upfront vs 1.2–3.5 s staged-on-
-    // commit — what lets the default band sit at 2 s instead of 4 s.
+    // slices 0 AND 1 staged upfront (mtime-ordered; one file still
+    // admitted per trigger), so gap₁ is just warm batch duration +
+    // trigger cadence — NOT the staging write, which at larger data
+    // sizes dominated the gap and forced a wide band. Only batch 3's
+    // file is held back (the large-gap control). Measured at sf0.1:
+    // gap₁ ~0.7–1.5 s staged-upfront vs 1.2–3.5 s staged-on-commit —
+    // what lets the default band sit at 2 s instead of 4 s.
     stageFile(s, slices(0), s"$base/stage0", f"$base/in/0001.parquet", 100000L)
     stageFile(s, slices(1), s"$base/stage1", f"$base/in/0002.parquet", 200000L)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import ss.implicits._
-    val qName = s"graft_ttl2_${java.util.UUID.randomUUID().toString.take(8)}"
-    // trigger-start millis per data batch — the very clock TTL expiry
-    // runs on (see the batch-clocked note above)
-    val stamps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == qName && e.progress.numInputRows > 0)
-          stamps.add(java.time.Instant.parse(e.progress.timestamp).toEpochMilli)
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    def why(d: TtlDrain, n: Int) =
+      s"TTL-retention harness: batch $n not committed within " +
+        s"${d.secs} s (${d.committed} committed) — raise " +
+        "SPARK_GRAFT_TTL_DRAIN_SECS for this data size"
+    val ts = ttlReplay(s, base, ttlMs, "250 milliseconds") { d =>
+      d.await(3)(why(d, 3)) // warmup + slices 0 and 1 committed
+      val t1 = d.times(1) // skip warmup
+      // hold batch 3 until its TRIGGER stamp must land past t₁ + TTL
+      // (the batch-clocked expiry needs nothing more); the slack
+      // covers the trigger cadence plus the skew margin
+      val sleepMs = t1 + ttlMs + 400L - System.currentTimeMillis()
+      if (sleepMs > 0) Thread.sleep(sleepMs)
+      stageFile(s, slices(2), s"$base/stage2",
+        f"$base/in/0003.parquet", 300000L)
+      d.await(4)(why(d, 4))
     }
-    ss.streams.addListener(listener)
-    try {
-      val schema = ss.read.parquet(s"$base/in").schema
-      val counted = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/in")
-        .selectExpr("event_type", "CAST(user_id AS LONG) AS user_id")
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new TtlDistinctUsersProcessor(ttlMs),
-          TimeMode.ProcessingTime(), OutputMode.Append())
-        .toDF("event_type", "n_batch_users", "n_cumulative")
-      val q = counted.writeStream
-        .queryName(qName)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.ProcessingTime("250 milliseconds"))
-        .start()
-      def awaitBatches(n: Int): Unit = {
-        val deadline = System.nanoTime() + drainSecs * 1000L * 1000 * 1000
-        while (stamps.size < n && q.isActive && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        require(stamps.size >= n,
-          s"TTL-retention harness: batch $n not committed within " +
-            s"$drainSecs s (${stamps.size} committed) — raise " +
-            "SPARK_GRAFT_TTL_DRAIN_SECS for this data size")
-      }
-      try {
-        awaitBatches(3) // warmup + slices 0 and 1 committed
-        val t1 = {
-          val it = stamps.iterator(); it.next(); it.next() // skip warmup
-        }
-        // hold batch 3 until its TRIGGER stamp must land past t₁ + TTL
-        // (the batch-clocked expiry needs nothing more); the slack
-        // covers the trigger cadence plus the skew margin
-        val wakeAt = t1 + ttlMs + 400L
-        val sleepMs = wakeAt - System.currentTimeMillis()
-        if (sleepMs > 0) Thread.sleep(sleepMs)
-        stageFile(s, slices(2), s"$base/stage2",
-          f"$base/in/0003.parquet", 300000L)
-        awaitBatches(4)
-      } finally { q.stop(); q.awaitTermination() }
-      // the straddle the oracle bakes in, proven on the trigger clock
-      // TTL expiry actually reads (see the batch-clocked note above):
-      // batch-1 entries RETAINED at batch 2 (gap₁ < TTL) and EXPIRED
-      // at batch 3 (t₃ − t₁ ≥ TTL); ts(0) is the warmup batch, outside
-      // the measured band. A miss is returned (not thrown) — the
-      // caller retries with a wider band.
-      val ts = {
-        val it = stamps.iterator(); val b = Seq.newBuilder[Long]
-        while (it.hasNext) b += it.next()
-        b.result().sorted
-      }
-      if (ts.size != 4)
-        return Some(s"expected 4 one-file data micro-batches " +
-          s"(warmup + 3), observed ${ts.size}")
-      if (ts(2) - ts(1) >= ttlMs - skewMs)
-        return Some(s"RETAINED-at-batch-2 unproven: gap₁ = " +
-          s"${ts(2) - ts(1)} ms, needed < ${ttlMs - skewMs} ms under " +
-          s"the $ttlMs ms TTL")
-      if (ts(3) - ts(1) <= ttlMs + skewMs)
-        return Some(s"EXPIRED-at-batch-3 unproven: t₃ − t₁ = " +
-          s"${ts(3) - ts(1)} ms, needed > ${ttlMs + skewMs} ms")
+    // the straddle the oracle bakes in, proven on the trigger clock
+    // TTL expiry actually reads (see the batch-clocked note above):
+    // batch-1 entries RETAINED at batch 2 (gap₁ < TTL) and EXPIRED
+    // at batch 3 (t₃ − t₁ ≥ TTL); ts(0) is the warmup batch, outside
+    // the measured band. A miss is returned (not thrown) — the
+    // caller retries with a wider band.
+    if (ts.size != 4)
+      Some(s"expected 4 one-file data micro-batches " +
+        s"(warmup + 3), observed ${ts.size}")
+    else if (ts(2) - ts(1) >= ttlMs - skewMs)
+      Some(s"RETAINED-at-batch-2 unproven: gap₁ = " +
+        s"${ts(2) - ts(1)} ms, needed < ${ttlMs - skewMs} ms under " +
+        s"the $ttlMs ms TTL")
+    else if (ts(3) - ts(1) <= ttlMs + skewMs)
+      Some(s"EXPIRED-at-batch-3 unproven: t₃ − t₁ = " +
+        s"${ts(3) - ts(1)} ms, needed > ${ttlMs + skewMs} ms")
+    else {
       println(s"[ttl2] straddle proven at band $ttlMs ms: gap₁ = " +
         s"${ts(2) - ts(1)} ms, t₃ − t₁ = ${ts(3) - ts(1)} ms")
       None
-    } finally ss.streams.removeListener(listener)
+    }
   }
 
   /** Mid-band TTL declared: user-class slices S1 = {1,2}, S2 = {2,3},
@@ -1600,8 +1407,7 @@ object WatermarkQueries extends QueryModule {
     * t₃ − t₁ > TTL), and batch 3 shares no users with batch 2, so the
     * undetermined batch-2-entry expiry never decides an output row. */
   def streamTtlRetention(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("ts"), col("user_id"), col("event_type"))
+    val ev = events(s, dir, "ts", "user_id", "event_type")
     val u = col("user_id") % 4
     runTtlRetention(s, streamRoot("t2", dir), Seq(
       ev.filter(u === 1 || u === 2),
@@ -1673,49 +1479,16 @@ object WatermarkQueries extends QueryModule {
     * ts), so the downstream flush term is the plain
     * `window_end <= final watermark` the windowed query pins. */
   private[graft] def runChained(s: SparkSession, base: String,
-      slices: Seq[DataFrame], delay: String): DataFrame = {
-    wipe(s, base)
-    val dataSlices = stageSlices(s, base, slices).count(identity)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = ss.read.parquet(s"$base/in").schema
-    val agg = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in")
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assertProgress(q, dataSlices)
-    s.read.parquet(s"$base/out")
-      .orderBy(col("window_start"), col("event_type"))
-  }
+      slices: Seq[DataFrame], delay: String): DataFrame =
+    replay(s, base, slices, Seq("window_start", "event_type"))((_, in) =>
+      dailyCounts(in("in").withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark("event_id")))
 
   /** Same arrival sequence as [[streamDedup]] — planted re-arrivals and
     * all — so the chained query pins dedup suppression AND window
     * finalization on one stream. */
-  def streamChained(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.operators.EventOps.events(s, dir)
-      .select(col("event_id"), col("ts"), col("event_type"))
-    val split = lit(java.sql.Timestamp.valueOf(s"$SplitDate 00:00:00"))
-    val onTime = ev.filter(col("ts") < split && col("event_id") % 4 =!= 0)
-    val slice2 = ev.filter(col("ts") >= split)
-      .unionByName(onTime.filter(col("event_id") % 16 === 1))
-    val slice3 = ev.filter(col("ts") < split && col("event_id") % 4 === 0)
-      .unionByName(onTime.filter(col("event_id") % 16 === 5))
-    runChained(s, streamRoot("ch", dir), Seq(onTime, slice2, slice3),
-      s"$DelayDays days")
-  }
+  def streamChained(s: SparkSession, dir: String): DataFrame =
+    runChained(s, streamRoot("ch", dir), rearrivals(s, dir), s"$DelayDays days")
 
   private val evStreamChained = QueryDef(
     "ev_stream_chained",

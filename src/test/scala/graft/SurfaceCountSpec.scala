@@ -107,6 +107,22 @@ class SurfaceCountSpec extends AnyFunSuite {
         s"documented but unread: ${(inTable -- inCode).toSeq.sorted.mkString(", ")}")
   }
 
+  test("the scratch root and the one-file-per-trigger source are each written once") {
+    // graft.core.Scratch.dir and WatermarkQueries.source are the one
+    // place each; a hand-copied harness or scratch rule would add a line
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val codeLines =
+      try sources.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(p => java.nio.file.Files.readAllLines(p).asScala
+          .filterNot(_.matches("\\s*(//|/?\\*).*")).map(l => s"$p: ${l.trim}"))
+        .toList
+      finally sources.close()
+    Seq("java.io.tmpdir", "\"maxFilesPerTrigger\"").foreach { needle =>
+      val hits = codeLines.filter(_.contains(needle))
+      assert(hits.size == 1, s"$needle on ${hits.size} code lines: ${hits.mkString("; ")}")
+    }
+  }
+
   test("every ingest stamp the benchmark's tracer reads is a key of its legOf map") {
     // perfbench's Tracer attributes an ingest batch's jobs to legs by the
     // stamp text ingestBatch prints; a renamed stamp would zero its leg
